@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flatbread_spark.sources.tables import load_table
 from flatbread_spark.streaming.replay import (
     bounded_state_partitions as _bounded_state_partitions,
 )
@@ -52,7 +53,7 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         "spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     )
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = load_table(spark, sf_dir, name)
     if name == "events":
         from flatbread_spark.functions.eventtime import ensure_epoch_ns
 
@@ -2113,7 +2114,7 @@ def q_stream_replay(spark, sf_dir):
     _load(spark, sf_dir, "events")  # sets session confs (tz, nanosAsLong)
     # the streaming source needs the RAW FILE schema (ts as written —
     # stream_sessionize normalizes to epoch-ns after readStream itself)
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = load_table(spark, sf_dir, "events").schema
     # the parquet streaming source lists a DIRECTORY; testdata is a single
     # file, so expose it through a symlinked temp dir
     stream_dir = tempfile.mkdtemp(prefix="fb_stream_replay_")
@@ -3097,7 +3098,7 @@ def q_stream_upsert(spark, sf_dir):
     )
 
     _load(spark, sf_dir, "events")  # sets session confs (tz, nanosAsLong)
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = load_table(spark, sf_dir, "events").schema
     stream_dir = tempfile.mkdtemp(prefix="fb_stream_upsert_")
     link = os.path.join(stream_dir, "events.parquet")
     if not os.path.exists(link):
@@ -3385,7 +3386,7 @@ def q_stream_rate_anomaly(spark, sf_dir):
 
     DAY_NS = 86_400_000_000_000
     _load(spark, sf_dir, "events")  # sets session confs (tz, nanosAsLong)
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = load_table(spark, sf_dir, "events").schema
     stream_dir = tempfile.mkdtemp(prefix="fb_stream_rate_")
     link = os.path.join(stream_dir, "events.parquet")
     if not os.path.exists(link):
@@ -4031,9 +4032,7 @@ def q_stream_drift(spark, sf_dir):
     # schema read below depends on), not for data: the reference mix now
     # derives from the drained counts (see below), so no batch scan runs
     _load(spark, sf_dir, "events")
-    raw_schema = spark.read.parquet(
-        os.path.join(sf_dir, "events.parquet")
-    ).schema
+    raw_schema = load_table(spark, sf_dir, "events").schema
     stream_dir = tempfile.mkdtemp(prefix="fb_stream_drift_")
     link = os.path.join(stream_dir, "events.parquet")
     if not os.path.exists(link):

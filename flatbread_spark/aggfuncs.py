@@ -64,6 +64,23 @@ def nan_safe(df, name: str) -> Column:
     return F.col(name)
 
 
+def pandas_div(num: Column, den: Column) -> Column:
+    """``num / den`` in double with pandas' ``div`` result on a zero
+    denominator: x/0 is +inf or -inf by the sign of x, 0/0 and NaN/0 are
+    NaN, and a NULL operand stays NULL. Spark 4's ANSI mode would instead
+    raise ``DIVIDE_BY_ZERO`` and fail the whole query (a totals row or
+    column of signed values can sum to 0). A -0.0 denominator counts as
+    +0.0. Every percentage division goes through here."""
+    n, d = num.cast("double"), den.cast("double")
+    inf = F.lit(float("inf"))
+    at_zero = (
+        F.when(F.isnan(n) | (n == 0), F.lit(float("nan")))
+        .when(n > 0, inf)
+        .when(n < 0, -inf)
+    )
+    return F.when(d == 0, at_zero).otherwise(n / d)
+
+
 def _nn_array(cols: list[Column]) -> Column:
     """Array of the row's non-null values, cast to double.
 

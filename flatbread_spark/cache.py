@@ -22,9 +22,11 @@ events operator's per-key frame), ``graph`` (edge frames), ``sketch``,
 (the distinct-name vocab), ``lm``
 (the unigram count table — the bigram table is corpus-tailed and
 deliberately NOT cached, ADVICE r10), ``skew`` (join_estimate's per-key
-counts), ``pca`` (the moment aggregate — pca_train :func:`unpin`\ s it
-itself after collecting), plus the entry module's
-``knn_recall``/``ivf_sweep`` memoized baselines.
+counts), ``pca`` (the moment aggregate — pca_train releases it itself
+with :func:`unpin` after collecting), ``pivot`` (the
+``sources.pivot.pivot_table`` output), ``frame`` (a
+``FlatFrame.from_df`` input pinned before its position probe), plus the
+entry module's ``knn_recall``/``ivf_sweep`` memoized baselines.
 """
 from __future__ import annotations
 

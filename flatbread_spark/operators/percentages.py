@@ -10,6 +10,8 @@ metadata, so adding the level moves no data.
 
 Spark-first notes:
 - axis=1 is plain column arithmetic (no shuffle at all).
+- A zero totals cell divides the pandas way (``aggfuncs.pandas_div``:
+  ±inf, 0/0 NaN), not into Spark's ANSI ``DIVIDE_BY_ZERO``.
 - axis=0/2 cross-join the 1-row totals slice — Catalyst broadcasts it.
 - Apportioned rounding (largest-remainder via running sums,
   ``percentages.py:390-419``) is the one order-dependent kernel: a window
@@ -29,6 +31,7 @@ from typing import Sequence
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from flatbread_spark.aggfuncs import pandas_div
 from flatbread_spark.frame import POS, ColInfo, FlatFrame, make_col_name
 from flatbread_spark.operators.totals import _resolve_axis
 
@@ -224,7 +227,7 @@ def as_percentages(
 
     pct_exprs: dict[str, Column] = {}
     for c in dcols:
-        e = F.col(c.name).cast("double") / divisor(c).cast("double") * F.lit(base)
+        e = pandas_div(F.col(c.name), divisor(c)) * F.lit(base)
         pct_exprs[c.name] = e
 
     if ndigits >= 0:
@@ -285,7 +288,7 @@ def add_percentages(
     ranged_ap = ndigits >= 0 and apportioned_rounding and ff.pos_ranged
     raw_named: dict[str, Column] = {}
     for c in dcols:
-        e = F.col(c.name).cast("double") / divisor(c).cast("double") * F.lit(base)
+        e = pandas_div(F.col(c.name), divisor(c)) * F.lit(base)
         if ndigits >= 0 and not ranged_ap:
             e = _apportioned_round(e, ndigits) if apportioned_rounding else F.round(e, ndigits)
         if fresh:

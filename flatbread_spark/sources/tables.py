@@ -4,10 +4,21 @@ The reference has no file readers (in-memory pandas only — SURVEY §2.2); the
 engine exposes Spark's native scans so Catalyst gets predicate pushdown,
 column pruning and partition pruning for free. ``load_table`` is the thin
 convention wrapper over the driver testdata layout (one parquet per table).
+
+Every ``spark.read.parquet`` without a schema runs a one-task Spark job
+(``SchemaMergeUtils.mergeSchemasInParallel``) to read the footers. The
+presentation chain loads the same few tables query after query, so
+``load_table``/``load_tables`` infer each file's schema once per
+SparkSession and pass it to later reads (``.schema(...)``, no job). The
+memo is keyed on the file's size and ``mtime_ns`` and on the session confs
+that change inference, so a rewritten file or a flipped conf is inferred
+again; a path the local filesystem cannot stat is inferred on every read.
 """
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -17,8 +28,49 @@ TABLES = (
 )
 
 
+# Session confs that change the schema parquet inference returns.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# session -> {path: (key, schema)}; one entry per path, so a rewritten
+# file replaces its stale schema instead of adding one
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _file_stamp(path: str) -> tuple:
+    """(path, size, mtime_ns) of the file, or of every file under the
+    directory; raises OSError when the path cannot be stat'ed locally."""
+    if os.path.isdir(path):
+        files = [os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs]
+    else:
+        files = [path]
+    return tuple(sorted((f, (st := os.stat(f)).st_size, st.st_mtime_ns) for f in files))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per session
+    and file version (see the module docstring)."""
+    try:
+        key = (_file_stamp(path), tuple(spark.conf.get(k, None) for k in _INFER_CONFS))
+    except OSError:
+        return spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.setdefault(spark, {}).get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS.setdefault(spark, {})[path] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
@@ -26,7 +78,7 @@ def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, Dat
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            out[name] = spark.read.parquet(path)
+            out[name] = _read_parquet(spark, path)
     return out
 
 

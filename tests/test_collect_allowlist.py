@@ -41,6 +41,7 @@ COLLECT_ALLOWLIST = {
     "operators/ranking.py": (3, "per-partition boundary stats (partitions rows) + range-bound rows + 1-row total"),
     "operators/curation.py": (2, "per-gate funnel summary (gate-count rows) + vocab_overlap per-group vocabulary sizes (#groups rows — the old plan already broadcast them to the driver)"),
     "operators/vocabulary.py": (1, "characteristic_terms per-group token totals: #groups rows — the old plan already broadcast them to the driver"),
+    "sources/pivot.py": (1, "pivot-value discovery: capped at spark.sql.pivotMaxValues + 1 rows, past which it raises (the collect Spark's own groupBy().pivot() ran internally)"),
     "output/tablespec.py": (2, "display/export sink: truncation-limited presentation rows by contract"),
     "output/excel.py": (1, "export sink: presentation-sized by contract (same class as tablespec)"),
 }

@@ -166,3 +166,24 @@ def test_apportioned_rounding_precision_loss_boundary(spark):
     data = out.loc[["r0", "r1", "r2", "r3"], "c0"]
     assert data.tolist() == [5.0, 34.0, 48.0, 13.0]
     assert data.sum() == 100.0
+
+
+def test_zero_sum_row_divides_like_pandas(spark):
+    """A signed pivot whose row 'a' sums to 0: axis=1 percentages divide the
+    pandas way (x/0 = ±inf, 0/0 = NaN) instead of raising ANSI
+    DIVIDE_BY_ZERO; rows with a nonzero total are unchanged."""
+    from flatbread_spark import pivot_table
+
+    src = spark.createDataFrame(
+        [("a", "F", 3.0), ("a", "O", -3.0), ("b", "F", 2.0), ("b", "O", 4.0)],
+        "k string, s string, v double",
+    )
+    ff = pivot_table(src, index="k", columns="s", values="v",
+                     column_values=["F", "O"]).add_totals(axis=1)
+    pdf = ff.to_pandas()
+    want = pdf.div(pdf["Totals"], axis=0).to_numpy()
+    assert np.isinf(want[0, :2]).all() and np.isnan(want[0, 2])
+    np.testing.assert_array_equal(ff.as_percentages(axis=1).to_pandas().to_numpy(), want)
+    added = ff.add_percentages(axis=1).to_pandas()
+    np.testing.assert_array_equal(added["pct"].to_numpy(), want)
+    np.testing.assert_array_equal(added["n"].to_numpy(), pdf.to_numpy())
