@@ -116,87 +116,107 @@ def make_minhash_udf(coeffs, prime: int):
     return minhash
 
 
-def make_knn_shortlist_fn(q_ids, q_mat, depth: int, chunk: int = 4096):
-    """Corpus-side candidate shortlist for ``knn_bruteforce``'s exact path.
+def make_knn_shortlist_fn(q_ids, q_vecs, depth: int, score: str = "cosine",
+                          chunk: int = 4096):
+    """All-pairs candidate shortlist for the similarity operators.
 
-    One numpy matmul per ``chunk``-row slab replaces an interpreted
-    higher-order-function double dot per (query, corpus) PAIR — at Q
-    queries the old plan materialized Q×|corpus| join rows, evaluated
-    O(Q×|corpus|×dim) interpreted ops, and range-sorted all of it through
-    a per-query rank window. Here only candidate rows ever leave the scan.
+    One numpy matmul per ``chunk``-row corpus slab scores the slab against
+    every query whose vector has the slab row's length, so only candidate
+    rows ever leave the scan. ``score`` picks the fast score:
+    ``"cosine"`` (double cosine of float vectors) or ``"int8"`` (the exact
+    int64 dot of int8 codes, emitted as BIGINT).
 
     Selection is a deterministic SUPERSET of the global shortlist: per
-    slab and query, every corpus row whose fast cosine is >= the slab's
-    ``depth``-th largest value is emitted (ties at the boundary are ALL
-    kept, so the downstream window — the identical
-    (fast desc, neighbor asc) order knn_bruteforce always used — trims to
-    exactly the same global top-``depth`` set regardless of slab
-    boundaries). Self-pairs (corpus id == query id) are excluded here,
-    matching the join condition they replaced; rows with NULL or
-    wrong-length vectors are dropped (their fast cosine was NULL in the
-    expression path — never shortlisted). NaN cosines (zero-norm vectors)
-    map to +inf so pathological rows stay in the superset for the exact
-    re-rank to decide.
+    slab and query, every corpus row whose score is >= the slab's
+    ``depth``-th largest is emitted (boundary ties are ALL kept, so the
+    downstream (score desc, neighbor asc) window trims to exactly the
+    global top-``depth`` set whatever the slab boundaries). Self-pairs
+    (corpus id == query id) are excluded. A row or query with a NULL
+    vector, a length no query (row) shares, or a NULL code is never
+    scored — its expression-path score was NULL. NaN cosines (zero-norm
+    vectors) map to +inf so those rows stay for the exact re-rank.
 
-    The corpus vector rides along in the output so the exact-decimal
-    re-rank needs no second corpus scan. Returns a mapInPandas function
-    for schema ``query_id <t>, neighbor_id <t>, __fast double,
-    __cv array<float>``.
+    The input frame has ``__nid`` and the scored vector ``__sv``; the
+    output carries one payload column ``__cv`` (``__pl`` when the input
+    has one, else ``__sv``) so the refine needs no second corpus scan.
+    Returns a mapInPandas function for schema ``query_id <t>,
+    neighbor_id <t>, __fast double|bigint, __cv <payload type>``.
     """
-    q_mat = np.asarray(q_mat, dtype=np.float64)
-    nq, dim = q_mat.shape if q_mat.ndim == 2 else (0, 0)
-    q_ids_arr = np.asarray(q_ids)
-    qn = np.sqrt((q_mat * q_mat).sum(axis=1)) if nq else np.zeros(0)
+    int8 = score == "int8"
+    q_ids = np.asarray(q_ids)
+    by_dim = {}
+    for i, v in enumerate(q_vecs):
+        if v is not None:
+            by_dim.setdefault(len(v), []).append(i)
+    groups = []
+    for dim, idx in by_dim.items():
+        Q = _stack([q_vecs[i] for i in idx], dim)
+        ok = np.isfinite(Q).all(axis=1) if int8 else np.ones(len(idx), bool)
+        Q = Q[ok].astype(np.int64) if int8 else Q
+        qn = np.sqrt((Q * Q).sum(axis=1))
+        groups.append((dim, q_ids[np.asarray(idx)[ok]], Q, qn))
+
+    def slab_scores(C, Q, qn):
+        if int8:
+            # exact integer dot; |dot| <= dim * 127^2 is exact in float64
+            return (C.astype(np.int64) @ Q.T).astype(np.float64)
+        cn = np.sqrt((C * C).sum(axis=1))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            S = (C @ Q.T) / (cn[:, None] * qn[None, :])
+        return np.where(np.isnan(S), np.inf, S)
 
     def shortlist(batches):
-        empty = pd.DataFrame(
-            {"query_id": q_ids_arr[:0], "neighbor_id": q_ids_arr[:0],
-             "__fast": np.zeros(0),
-             "__cv": pd.Series([], dtype=object)}
-        )
-        if nq == 0:
-            yield empty
-            return
         for pdf in batches:
             ids_in = pdf["__nid"].to_numpy()
-            vec_in = pdf["__cv"].to_numpy()
-            ok = np.array(
-                [v is not None and len(v) == dim for v in vec_in], dtype=bool
-            )
-            if not ok.any():
-                continue
-            ids = ids_in[ok]
-            vecs = vec_in[ok]
-            C = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-            cn = np.sqrt((C * C).sum(axis=1))
-            for s in range(0, len(ids), chunk):
-                e = min(s + chunk, len(ids))
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    S = (C[s:e] @ q_mat.T) / (cn[s:e, None] * qn[None, :])
-                S = np.where(np.isnan(S), np.inf, S)
-                slab_ids = ids[s:e]
-                self_mask = slab_ids[:, None] == q_ids_arr[None, :]
-                # self rows must not consume a slot nor be emitted
-                S[self_mask] = -np.inf
-                take = min(depth, S.shape[0])
-                vstar = np.partition(S, S.shape[0] - take, axis=0)[
-                    S.shape[0] - take, :
-                ]
-                keep = (S >= vstar[None, :]) & ~self_mask
-                r, c = np.nonzero(keep)
-                if len(r) == 0:
+            vec_in = pdf["__sv"].to_numpy()
+            pl_in = pdf["__pl" if "__pl" in pdf else "__sv"].to_numpy()
+            lens = np.array([-1 if v is None else len(v) for v in vec_in])
+            for dim, gq_ids, Q, qn in groups:
+                rows = np.nonzero(lens == dim)[0]
+                if len(rows) == 0 or len(Q) == 0:
                     continue
-                yield pd.DataFrame(
-                    {
-                        "query_id": q_ids_arr[c],
-                        "neighbor_id": slab_ids[r],
-                        "__fast": S[r, c],
-                        "__cv": list(vecs[s:e][r]),
-                    }
-                )
-        yield empty
+                C = _stack(vec_in[rows], dim)
+                if int8:
+                    fin = np.isfinite(C).all(axis=1)
+                    rows, C = rows[fin], C[fin]
+                for s in range(0, len(rows), chunk):
+                    e = min(s + chunk, len(rows))
+                    S = slab_scores(C[s:e], Q, qn)
+                    slab_ids = ids_in[rows[s:e]]
+                    self_mask = slab_ids[:, None] == gq_ids[None, :]
+                    # self rows must not consume a slot nor be emitted
+                    S[self_mask] = -np.inf
+                    take = min(depth, S.shape[0])
+                    vstar = np.partition(S, S.shape[0] - take, axis=0)[
+                        S.shape[0] - take, :
+                    ]
+                    r, c = np.nonzero((S >= vstar[None, :]) & ~self_mask)
+                    if len(r) == 0:
+                        continue
+                    fast = S[r, c]
+                    yield pd.DataFrame(
+                        {
+                            "query_id": gq_ids[c],
+                            "neighbor_id": slab_ids[r],
+                            "__fast": fast.astype(np.int64) if int8 else fast,
+                            "__cv": list(pl_in[rows[s:e]][r]),
+                        }
+                    )
+        yield pd.DataFrame(
+            {"query_id": q_ids[:0], "neighbor_id": q_ids[:0],
+             "__fast": np.zeros(0, np.int64 if int8 else np.float64),
+             "__cv": pd.Series([], dtype=object)}
+        )
 
     return shortlist
+
+
+def _stack(vecs, dim):
+    """(n, dim) float64 matrix of equal-length vectors; NULL elements
+    become NaN."""
+    return np.array(
+        [np.asarray(v, dtype=np.float64) for v in vecs], dtype=np.float64
+    ).reshape(len(vecs), dim)
 
 
 def make_pair_score_fn(threshold_slack, chunk: int = 2048):

@@ -319,10 +319,11 @@ def embedding_contamination(
     contract), nearest = (cos desc, train id asc).
 
     Scale shape: this is :func:`operators.similarity.knn_bruteforce` with
-    k=1 over a bipartite pair set (eval broadcast against the train scan —
-    eval sets are small by construction). At open-corpus scale swap the
-    all-pairs candidate source for ``ivf_candidates`` / ``knn_lsh``
-    feeding the same exact re-rank, exactly as the knn queries document.
+    k=1 over a bipartite pair set (the eval set rides the all-pairs kernel
+    against the train scan — eval sets are small by construction). At
+    open-corpus scale swap the all-pairs candidate source for
+    ``ivf_candidates`` / ``knn_lsh`` feeding the same exact re-rank,
+    exactly as the knn queries document.
 
     Id contract: a train row whose id EQUALS the eval row's id is excluded
     from the neighbor search (the knn self-exclusion) — split your corpus

@@ -148,7 +148,9 @@ def _covariance_with_pin(
     mean_dec = {r["i"]: r["s"] for r in rows if r["i"] >= 0 and r["j"] == -1}
     prods = [(r["i"], r["j"], r["s"]) for r in rows if r["j"] >= 0]
     spark = df.sparkSession
-    pdf = spark.createDataFrame(prods, "i int, j int, s decimal(28,12)")
+    # the sums of decimal(28,12) partials are decimal(38,12) (Spark widens
+    # sum() precision by 10); re-injecting them narrower would overflow
+    pdf = spark.createDataFrame(prods, "i int, j int, s decimal(38,12)")
     # decimal literals cast to double IN THE JVM — the identical
     # Decimal.toDouble the old plan applied to the same decimal sums
     mean_map = F.create_map(
@@ -157,11 +159,11 @@ def _covariance_with_pin(
             for k in sorted(mean_dec)
             for x in (
                 F.lit(k),
-                F.lit(mean_dec[k]).cast("decimal(28,12)"),
+                F.lit(mean_dec[k]).cast("decimal(38,12)"),
             )
         ]
     )
-    n_col = F.lit(n_dec).cast("decimal(28,12)").cast("double")
+    n_col = F.lit(n_dec).cast("decimal(38,12)").cast("double")
     out = pdf.select(
         "i",
         "j",

@@ -1,17 +1,28 @@
-"""Similarity search over embedding columns.
+"""Similarity search over embedding columns, as filter-and-refine.
 
-- ``knn_bruteforce``: exact top-k cosine for a (small) query set — broadcast
-  the queries against the corpus, window-rank per query. The baseline and the
-  verification oracle for the approximate paths.
-- ``knn_lsh``: random-hyperplane (sign) LSH — deterministic seeded planes,
-  multi-probe by matching any of ``tables`` independent signatures, exact
-  re-rank inside candidate buckets. The scale path: the corpus is hashed once
-  (linear scan, no shuffle), candidates come from a bucket equi-join instead
-  of a full cross product.
-- ``ivf_assign`` / ``knn_ivf``: IVF-style coarse quantization — assign every
-  vector to its nearest of ``centroids`` (broadcast), search only the
-  ``nprobe`` closest cells. Centroids are caller-provided (e.g. sampled ids),
-  keeping the operator deterministic and shuffle-free on the corpus side.
+Every top-k operator here is a candidate generator followed by one shared
+refine step (:func:`_refine`): trim each query's candidates to a bounded
+shortlist by a fast score, score the survivors with exact-decimal cosine
+(:func:`~flatbread_spark.functions.vectors.cosine_exact`, rounded to 6),
+and keep the top k by :func:`rank_topk` — ``(score desc, neighbor_id
+asc)``, the one ranking every result and oracle in this repo shares.
+
+Three private candidate generators feed it:
+
+- all-pairs (:func:`_all_pairs`): the (small) query set is collected once
+  and rides an Arrow kernel that scores each corpus slab with one numpy
+  matmul — float cosine or the exact BIGINT int8 code dot — and emits a
+  tie-complete per-slab shortlist. ``knn_bruteforce`` (the baseline and
+  the verification oracle for the approximate paths), ``knn_quantized``
+  and ``mmr_rerank`` use it.
+- LSH buckets (``knn_lsh``): deterministic seeded sign-LSH planes; a
+  candidate shares a bucket with its query in at least one of ``tables``
+  tables. The corpus is hashed in one linear scan and candidates come
+  from a bucket equi-join instead of a full cross product.
+- IVF cells (:func:`ivf_candidates`): every vector is assigned to its
+  nearest caller-provided centroid and each query probes its ``nprobe``
+  nearest cells. Candidates are scored exactly, so ``knn_ivf`` needs only
+  :func:`rank_topk`.
 """
 from __future__ import annotations
 
@@ -21,7 +32,101 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from flatbread_spark.functions.vectors import cosine_exact, cosine_fast, dot_fast
+from flatbread_spark.functions.vectors import cosine_exact, cosine_fast
+
+
+def rank_topk(scored: DataFrame, k: int, by: str = "cos") -> DataFrame:
+    """Deterministic per-query top-k over a scored candidate frame: rank by
+    (``by`` desc, neighbor_id asc) — the tie-break every knn_* result and
+    oracle in this repo shares. Columns of ``scored`` pass through and
+    ``rank`` (1-based) is appended."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(by), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _exact_cos() -> Column:
+    return F.round(cosine_exact(F.col("__qv"), F.col("__cv")), 6).alias("cos")
+
+
+def _refine(
+    cands: DataFrame,
+    k: int,
+    depth: int | None = None,
+    qvecs: DataFrame | None = None,
+    keep: tuple = (),
+) -> DataFrame:
+    """The refine step every top-k operator shares. ``cands`` holds
+    ``query_id, neighbor_id`` and the neighbor vector ``__cv``, plus the
+    fast score ``__fast`` when ``depth`` is given and the query vector
+    ``__qv`` unless ``qvecs`` (``query_id, __qv``) supplies it after the
+    trim. Returns ``(query_id, neighbor_id, *keep, cos, rank)``."""
+    if depth is not None:
+        cands = rank_topk(cands, depth, by="__fast")
+    if qvecs is not None:
+        cands = cands.join(F.broadcast(qvecs), "query_id")
+    return rank_topk(
+        cands.select("query_id", "neighbor_id", *keep, _exact_cos()), k
+    )
+
+
+def _depth(k: int) -> int:
+    """Default shortlist depth for a top-``k`` refine. A cosine shortlist
+    miss would need the double and exact-decimal cosines to disagree
+    across a >3k-rank gap (~1e-12 per rank): not attainable with 6-digit
+    rounding."""
+    shortlist_depth = max(4 * k, k + 20)
+    return shortlist_depth
+
+
+def _all_pairs(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    depth: int,
+    score: str = "cosine",
+    payload: str = "vector",
+) -> tuple[DataFrame, DataFrame]:
+    """All-pairs candidate generator: ``(query_id, neighbor_id, __fast,
+    __cv)`` holding a tie-complete superset of each query's top-``depth``
+    by the fast score, plus the query vectors ``(query_id, __qv)`` as a
+    local relation. ``score`` is ``"cosine"`` (double) or ``"int8"`` (the
+    exact BIGINT dot of :func:`int8_codes`); the ``__cv`` payload is the
+    corpus vector, or its codes with ``payload="codes"``.
+
+    The query set is collected once: it is small by contract and rides
+    the kernel closure. Each corpus row is scored only against queries
+    whose vector has its length, so a NULL or odd-length query yields no
+    rows and never hides the others."""
+    from flatbread_spark.functions._arrow_kernels import make_knn_shortlist_fn
+    from flatbread_spark.functions.vectors import int8_codes, int8_scale
+
+    int8 = score == "int8"
+    vec = F.col(vec_col)
+    sv = int8_codes(vec, int8_scale(vec)) if int8 else vec
+    q = queries.select(
+        F.col(id_col).alias("query_id"), vec.alias("__qv"), sv.alias("__sv")
+    )
+    q_rows = q.collect()
+    kernel = make_knn_shortlist_fn(
+        [r["query_id"] for r in q_rows], [r["__sv"] for r in q_rows], depth, score
+    )
+    # the kernel's payload is __pl when present, else the scored __sv
+    pl = [vec.alias("__pl")] if int8 and payload == "vector" else []
+    c = corpus.select(F.col(id_col).alias("__nid"), sv.alias("__sv"), *pl)
+    idt = corpus.schema[id_col].dataType.simpleString()
+    cands = c.mapInPandas(
+        kernel,
+        f"query_id {idt}, neighbor_id {idt}, "
+        f"__fast {'bigint' if int8 else 'double'}, "
+        f"__cv {c.schema[c.columns[-1]].dataType.simpleString()}",
+    )
+    qvecs = corpus.sparkSession.createDataFrame(q_rows, q.schema).select(
+        "query_id", "__qv"
+    )
+    return cands, qvecs
 
 
 def knn_bruteforce(
@@ -30,109 +135,18 @@ def knn_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    exact: bool = True,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine (self excluded).
 
     Returns (query_id, neighbor_id, cos, rank). Deterministic: exact-decimal
-    cosine + (cos desc, neighbor id asc) ranking.
+    cosine + (cos desc, neighbor id asc) ranking. All-pairs double cosine
+    keeps a ``max(4k, k+20)``-deep shortlist per query; only the shortlist
+    pays the exact-decimal score. A query with a NULL vector, or one no
+    corpus row shares the length of, returns no rows.
     """
-    # Per-vector norms are computed ONCE per row BEFORE the pair join: the
-    # hot loop is O(|q|·|c|) pairs, and cosine_fast's inline norms would
-    # re-reduce both 64-float arrays per PAIR — 3x the higher-order-function
-    # work for the same bits (sqrt-then-multiply is the identical double
-    # expression either way, so shortlist order is unchanged).
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.sqrt(dot_fast(F.col(vec_col), F.col(vec_col))).alias("__qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        F.sqrt(dot_fast(F.col(vec_col), F.col(vec_col))).alias("__cn"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    if not exact:
-        cos = dot_fast(F.col("__qv"), F.col("__cv")) / (
-            F.col("__qn") * F.col("__cn")
-        )
-        scored = (
-            c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id", F.round(cos, 6).alias("cos"))
-        )
-        return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-    # exact mode, two-phase: the corpus-sized hot loop scores with plain
-    # double cosine and keeps a 4k-deep shortlist per query; only the
-    # shortlist is re-scored with exact-decimal cosine, which decides the
-    # final ranking and the output value. A shortlist miss would need the
-    # double vs decimal scores to disagree across a >3k-rank gap (~1e-12
-    # cosine difference per rank) — not attainable with 6-digit rounding.
-    #
-    # The hot loop is an Arrow kernel (round 12, guide §4.2/§8): the old
-    # plan materialized |queries|×|corpus| broadcast-join rows, evaluated
-    # an interpreted HOF double dot per PAIR, and range-sorted all of it
-    # through the per-query rank window. Now one numpy matmul per corpus
-    # slab emits only per-slab shortlist candidates (a deterministic
-    # value-superset — boundary ties all kept), the global window trims
-    # them with the identical (fast desc, neighbor asc) order, and the
-    # exact-decimal re-rank — unchanged, still the value contract — runs
-    # on the same bounded shortlist. The query set is collected once: it
-    # is small by contract (the old plan already broadcast it — the same
-    # driver footprint).
-    import numpy as np
-
-    from flatbread_spark.functions._arrow_kernels import make_knn_shortlist_fn
-
-    shortlist_depth = max(4 * k, k + 20)
-    q_proj = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    q_rows = q_proj.collect()
-    spark = corpus.sparkSession
-    qf = spark.createDataFrame(q_rows, q_proj.schema)
-    valid = [
-        r for r in q_rows
-        if r["__qv"] is not None
-    ]
-    dims = {len(r["__qv"]) for r in valid}
-    dim = max(dims) if dims else 0
-    valid = [r for r in valid if len(r["__qv"]) == dim]
-    q_ids = [r["query_id"] for r in valid]
-    q_mat = (
-        np.array([list(r["__qv"]) for r in valid], dtype=np.float64)
-        if valid
-        else np.zeros((0, 0))
-    )
-    idt = corpus.schema[id_col].dataType.simpleString()
-    kernel = make_knn_shortlist_fn(q_ids, q_mat, shortlist_depth)
-    shortlist = (
-        corpus.select(
-            F.col(id_col).alias("__nid"), F.col(vec_col).alias("__cv")
-        )
-        .mapInPandas(
-            kernel,
-            f"query_id {idt}, neighbor_id {idt}, __fast double, "
-            "__cv array<float>",
-        )
-        .withColumn(
-            "__frank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("__fast"), F.asc("neighbor_id")
-                )
-            ),
-        )
-        .filter(F.col("__frank") <= shortlist_depth)
-        .join(F.broadcast(qf), "query_id")
-    )
-    cos = cosine_exact(F.col("__qv"), F.col("__cv"))
-    return (
-        shortlist.select("query_id", "neighbor_id", F.round(cos, 6).alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    depth = _depth(k)
+    cands, qvecs = _all_pairs(corpus, queries, id_col, vec_col, depth)
+    return _refine(cands, k, depth, qvecs)
 
 
 def _hyperplanes(dim: int, nbits: int, seed: int) -> list[list[float]]:
@@ -143,15 +157,6 @@ def _hyperplanes(dim: int, nbits: int, seed: int) -> list[list[float]]:
         n = math.sqrt(sum(x * x for x in v)) or 1.0
         planes.append([x / n for x in v])
     return planes
-
-
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-LSH bucket id: bit i = sign(vec · plane_i). Expression-only."""
-    bucket = F.lit(0).cast("bigint")
-    for i, p in enumerate(planes):
-        d = dot_fast(vec, F.array(*[F.lit(x) for x in p]).cast("array<float>"))
-        bucket = bucket + F.when(d > 0, F.lit(1 << i).cast("bigint")).otherwise(0)
-    return bucket
 
 
 def knn_lsh(
@@ -182,45 +187,25 @@ def knn_lsh(
     )
     all_buckets = make_bucket_udf(planes_mat, tables, nbits)
 
-    def with_buckets(df, prefix):
-        out = df.select(
-            F.col(id_col).alias(f"{prefix}_id"), F.col(vec_col).alias(f"__{prefix}v")
-        ).withColumn("__bks", all_buckets(F.col(f"__{prefix}v")))
-        return out.select(
-            f"{prefix}_id", f"__{prefix}v",
-            F.posexplode("__bks").alias("__t", "__b"),
+    def with_buckets(df, id_name, vec_name):
+        return df.select(
+            F.col(id_col).alias(id_name), F.col(vec_col).alias(vec_name),
+            F.posexplode(all_buckets(F.col(vec_col))).alias("__t", "__b"),
         )
 
-    cb = with_buckets(corpus, "neighbor")
-    qb = with_buckets(queries, "query")
+    cb = with_buckets(corpus, "neighbor_id", "__cv")
+    qb = with_buckets(queries, "query_id", "__qv")
     cands = (
         cb.join(
             F.broadcast(qb),
             (cb["__t"] == qb["__t"]) & (cb["__b"] == qb["__b"])
             & (F.col("query_id") != F.col("neighbor_id")),
         )
-        .select("query_id", "neighbor_id", "__queryv", "__neighborv")
+        .select("query_id", "neighbor_id", "__qv", "__cv")
         .dropDuplicates(["query_id", "neighbor_id"])
+        .withColumn("__fast", cosine_fast(F.col("__qv"), F.col("__cv")))
     )
-    # same two-phase discipline as knn_bruteforce: candidates (the hot set —
-    # thousands per query) rank by fast double cosine first; only a bounded
-    # shortlist pays the exact-decimal re-score that decides output values
-    shortlist_depth = max(4 * k, k + 20)
-    wf = Window.partitionBy("query_id").orderBy(F.desc("__fast"), F.asc("neighbor_id"))
-    shortlist = (
-        cands.withColumn(
-            "__fast", cosine_fast(F.col("__queryv"), F.col("__neighborv"))
-        )
-        .withColumn("__frank", F.row_number().over(wf))
-        .filter(F.col("__frank") <= shortlist_depth)
-    )
-    cos = cosine_exact(F.col("__queryv"), F.col("__neighborv"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        shortlist.select("query_id", "neighbor_id", F.round(cos, 6).alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _refine(cands, k, _depth(k))
 
 
 def ivf_assign(
@@ -277,22 +262,7 @@ def ivf_candidates(
         F.broadcast(probes),
         (cells["cell"] == probes["cell"]) & (F.col("query_id") != F.col("neighbor_id")),
     )
-    cos = cosine_exact(F.col("__qv"), F.col("__cv"))
-    return cands.select(
-        "query_id", "neighbor_id", "pos", F.round(cos, 6).alias("cos")
-    )
-
-
-def rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Deterministic per-query top-k over a scored candidate frame:
-    rank by (cos desc, neighbor_id asc) — the tie-break every knn_* result
-    and oracle in this repo shares."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.select("query_id", "neighbor_id", "cos")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return cands.select("query_id", "neighbor_id", "pos", _exact_cos())
 
 
 def knn_ivf(
@@ -306,13 +276,12 @@ def knn_ivf(
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors assigned to their nearest
     centroid cell (one scan), each query probes its ``nprobe`` nearest cells,
-    candidates re-ranked with exact-decimal cosine. Same output shape as
+    candidates scored with exact-decimal cosine. Same output shape as
     ``knn_bruteforce`` so recall is directly measurable. Composition of
     :func:`ivf_candidates` + :func:`rank_topk` — the tuning sweep reuses the
     same pieces, so scoring/tie-break semantics cannot desync."""
-    return rank_topk(
-        ivf_candidates(corpus, queries, centroids, id_col, vec_col, nprobe), k
-    )
+    cands = ivf_candidates(corpus, queries, centroids, id_col, vec_col, nprobe)
+    return rank_topk(cands.drop("pos"), k)
 
 
 def knn_quantized(
@@ -324,66 +293,37 @@ def knn_quantized(
     shortlist: int | None = None,
 ) -> DataFrame:
     """Approximate top-k over INT8-quantized vectors — the memory/IO scale
-    path (codes are 4× smaller than float32; the corpus-side scan reads
-    codes, not floats). Two-phase:
+    path (codes are 4× smaller than float32). Two-phase:
 
-    1. SHORTLIST by the integer code dot product ``Σ qcᵢ·ccᵢ`` — all-BIGINT
-       (codes are in [-127,127], so 64-dim dots fit in 21 bits; no
-       overflow until ~2^40 dims), hence byte-identical across engines and
-       partitionings: the candidate set an oracle replays is EXACTLY this
-       engine's. Raw code-dot ranking ignores the per-vector scales —
-       unbiased for (near-)unit-norm embeddings, the common corpus case;
-       for wildly varying norms compose with IVF cells instead.
+    1. SHORTLIST by the integer code dot product ``Σ qcᵢ·ccᵢ`` — exact
+       int64 (codes are in [-127,127], so 64-dim dots fit in 21 bits),
+       hence byte-identical across engines and partitionings: the
+       candidate set an oracle replays is EXACTLY this engine's. Raw
+       code-dot ranking ignores the per-vector scales — unbiased for
+       (near-)unit-norm embeddings, the common corpus case; for wildly
+       varying norms compose with IVF cells instead.
     2. exact-decimal cosine on the ORIGINAL floats re-ranks the shortlist
-       and decides the output values (same discipline as
-       ``knn_bruteforce``) — quantization error can only cost shortlist
-       recall, never corrupt a returned score.
+       and decides the output values (same refine as ``knn_bruteforce``)
+       — quantization error can only cost shortlist recall, never corrupt
+       a returned score.
 
-    At open-corpus scale the all-pairs candidate join here is replaced by
-    any bucketed candidate source (:func:`ivf_candidates` /
-    :func:`knn_lsh`) feeding the same two phases; this operator is the
-    quantized-scoring building block plus the small-query-set search.
-    Returns ``(query_id, neighbor_id, qdot, cos, rank)``.
+    Candidates come from the all-pairs kernel: one int64 code matmul per
+    corpus slab against the collected query codes, no pair join. At
+    open-corpus scale a bucketed candidate source (:func:`ivf_candidates`
+    / :func:`knn_lsh`) replaces it; this operator is the quantized-scoring
+    building block plus the small-query-set search. A NULL or odd-length
+    query returns no rows. Returns ``(query_id, neighbor_id, qdot, cos,
+    rank)``.
     """
-    from flatbread_spark.functions.vectors import int8_codes, int8_scale
-
     if shortlist is None:
-        shortlist = max(4 * k, k + 20)
+        shortlist = _depth(k)
     if shortlist < k:
         raise ValueError(f"shortlist {shortlist} must be >= k {k}")
-
-    def staged(df, prefix):
-        scale = int8_scale(F.col(vec_col))
-        return df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.col(vec_col).alias(f"__{prefix}v"),
-            int8_codes(F.col(vec_col), scale).alias(f"__{prefix}c"),
-        )
-
-    c = staged(corpus, "neighbor")
-    q = staged(queries, "query")
-    qdot = F.aggregate(
-        F.zip_with(F.col("__queryc"), F.col("__neighborc"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
+    cands, qvecs = _all_pairs(
+        corpus, queries, id_col, vec_col, shortlist, "int8"
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("qdot"), F.asc("neighbor_id")
-    )
-    short = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "__queryv", "__neighborv",
-                qdot.alias("qdot"))
-        .withColumn("__srank", F.row_number().over(ws))
-        .filter(F.col("__srank") <= shortlist)
-    )
-    cos = cosine_exact(F.col("__queryv"), F.col("__neighborv"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        short.select("query_id", "neighbor_id", "qdot",
-                     F.round(cos, 6).alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _refine(
+        cands, k, shortlist, qvecs, keep=(F.col("__fast").alias("qdot"),)
     )
 
 
@@ -497,11 +437,14 @@ def mmr_rerank(
     order ``(score desc, id asc)`` — deterministic under any
     partitioning, pinnable by an oracle.
 
-    Scale shape: the candidate shortlist is one broadcast-query code-dot
-    join + per-query top-k window (swap in ``ivf_candidates`` at open
-    scale, as knn_quantized documents); the greedy loop runs per query
-    group inside ``applyInPandas`` — Arrow-batched, state bounded by
-    ``k_candidates`` codes, millions of queries parallelize by group.
+    Scale shape: the candidates are the all-pairs int8 kernel's code-dot
+    shortlist (the codes ride along as its payload) trimmed to
+    ``k_candidates`` by :func:`rank_topk` — swap in ``ivf_candidates`` at
+    open scale, as knn_quantized documents; the greedy loop runs per
+    query group inside ``applyInPandas`` — Arrow-batched, state bounded
+    by ``k_candidates`` codes, millions of queries parallelize by group.
+    Id types follow the corpus id column; a NULL or odd-length query
+    returns no rows.
 
     Returns ``(query_id, rank, neighbor_id, mmr_score)``.
     """
@@ -509,31 +452,11 @@ def mmr_rerank(
         raise ValueError("need 1 <= n_select <= k_candidates")
     if not 0 <= lambda_ppm <= 1_000_000:
         raise ValueError("lambda_ppm must be in [0, 1e6]")
-    from flatbread_spark.functions.vectors import int8_codes, int8_scale
-
-    def staged(df, prefix):
-        scale = int8_scale(F.col(vec_col))
-        return df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            int8_codes(F.col(vec_col), scale).alias(f"__{prefix}c"),
-        )
-
-    c = staged(corpus, "neighbor")
-    q = staged(queries, "query")
-    rel = F.aggregate(
-        F.zip_with(F.col("__queryc"), F.col("__neighborc"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
+    cands, _ = _all_pairs(
+        corpus, queries, id_col, vec_col, k_candidates, "int8", "codes"
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("rel"), F.asc("neighbor_id")
-    )
-    cand = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", rel.alias("rel"), "__neighborc")
-        .withColumn("__srank", F.row_number().over(ws))
-        .filter(F.col("__srank") <= k_candidates)
-        .drop("__srank")
+    cand = rank_topk(cands, k_candidates, by="__fast").select(
+        "query_id", "neighbor_id", F.col("__fast").alias("rel"), "__cv"
     )
 
     lam, n_sel = int(lambda_ppm), int(n_select)
@@ -545,9 +468,7 @@ def mmr_rerank(
         pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
         ids = pdf["neighbor_id"].to_numpy()
         rels = pdf["rel"].to_numpy(dtype=np.int64)
-        codes = np.array(
-            [np.asarray(x, dtype=np.int64) for x in pdf["__neighborc"]]
-        )
+        codes = np.array([np.asarray(x, dtype=np.int64) for x in pdf["__cv"]])
         n = len(ids)
         max_sim = None  # true max over SELECTED (may be negative)
         picked = np.zeros(n, dtype=bool)
@@ -560,7 +481,7 @@ def mmr_rerank(
             score = np.where(picked, np.iinfo(np.int64).min, score)
             best = int(np.argmax(score))  # ids sorted asc -> first max wins ties
             picked[best] = True
-            out.append((int(pdf["query_id"].iloc[0]), r + 1, int(ids[best]),
+            out.append((pdf["query_id"].iloc[0], r + 1, ids[best],
                         int(score[best])))
             sims = codes @ codes[best]
             max_sim = sims if max_sim is None else np.maximum(max_sim, sims)
@@ -568,7 +489,8 @@ def mmr_rerank(
             out, columns=["query_id", "rank", "neighbor_id", "mmr_score"]
         )
 
+    idt = corpus.schema[id_col].dataType.simpleString()
     return cand.groupBy("query_id").applyInPandas(
         greedy,
-        "query_id bigint, rank bigint, neighbor_id bigint, mmr_score bigint",
+        f"query_id {idt}, rank bigint, neighbor_id {idt}, mmr_score bigint",
     )

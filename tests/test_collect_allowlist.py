@@ -32,7 +32,7 @@ COLLECT_ALLOWLIST = {
     "operators/tokenizer.py": (1, "BPE pair-count table: vocabulary-bounded (top pairs after min_count)"),
     "operators/sampling.py": (3, "group counts for exact allocation (group-bounded) + 1-row FPS seed + greedy FPS state (k rows, k = requested sample)"),
     "operators/kmeans.py": (2, "k seed vectors + per-(cluster,dim) update rows: both k*dim model-bounded"),
-    "operators/similarity.py": (1, "knn_bruteforce query set: small by contract (the old plan already broadcast it — same driver footprint), feeds the shortlist kernel's captured matrix"),
+    "operators/similarity.py": (1, "all-pairs generator query set (knn_bruteforce, knn_quantized, mmr_rerank): small by contract (the old plans already broadcast it — same driver footprint), feeds the shortlist kernel's captured matrix"),
     "operators/trend.py": (2, "single aggregate rows (slope/anomaly scalars): 1 row each"),
     "operators/pca.py": (3, "d*d covariance moment aggregate (collected once; doubles as the pin materialization) + d*d covariance table in pca_train + d-row component table: all dimension-bounded"),
     "operators/graph.py": (2, "union-find edge probe hard-capped at driver_max_edges+1 (fails loudly past the cap) + 1-row count"),
