@@ -1115,13 +1115,15 @@ def q_lang_id(spark, sf_dir):
     from flatbread_spark.functions import text as T
 
     docs = _load(spark, sf_dir, "documents")
-    t = F.col("text")
-    scores = T.lang_scores(t)
+    names = [f"score_{lang}" for lang in T.LANG_MARKERS]
+    # the prediction reads the output score columns: lang_id(text) would
+    # score every language a second time (fresh lambdas defeat
+    # subexpression elimination), and CollapseProject keeps the two
+    # projections apart because each score is referenced twice
     return docs.select(
         "doc_id",
-        *[c.alias(f"score_{lang}") for lang, c in scores.items()],
-        T.lang_id(t).alias("pred_lang"),
-    )
+        *[c.alias(n) for n, c in zip(names, T.lang_scores(F.col("text")).values())],
+    ).select("*", T._lang_argmax([F.col(n) for n in names]).alias("pred_lang"))
 
 
 def q_winnowing(spark, sf_dir):
@@ -2569,6 +2571,8 @@ def q_tablespec_json(spark, sf_dir):
     `123.0` / `float`."""
     import hashlib
 
+    import pandas as pd
+
     from flatbread_spark import pivot_table
     from flatbread_spark.output.tablespec import TableSpecBuilder
 
@@ -2596,14 +2600,17 @@ def q_tablespec_json(spark, sf_dir):
     builder.set_formats({"even": "currency_eur", "odd": {"signDisplay": "always"}})
     js = builder.get_spec_as_json()
     spec = builder.build_spec()
+    # a pandas frame goes through Arrow into a LocalRelation; a list of
+    # tuples becomes a Python RDD whose every collect runs a job in Python
+    # workers
     return spark.createDataFrame(
-        [(
-            hashlib.md5(js.encode("utf-8")).hexdigest(),
-            len(js),
-            len(spec["values"]),
-            len(spec["columns"]["values"]),
-            bool(builder.truncated),
-        )],
+        pd.DataFrame({
+            "spec_md5": [hashlib.md5(js.encode("utf-8")).hexdigest()],
+            "spec_len": [len(js)],
+            "n_rows": [len(spec["values"])],
+            "n_cols": [len(spec["columns"]["values"])],
+            "truncated": [bool(builder.truncated)],
+        }),
         schema="spec_md5 string, spec_len bigint, n_rows bigint, "
         "n_cols bigint, truncated boolean",
     )
@@ -4027,6 +4034,7 @@ def q_stream_drift(spark, sf_dir):
         drift_from_counts,
         stream_mix_counts,
     )
+    from flatbread_spark.streaming.replay import input_row_counter
 
     # _load is kept for its SESSION side effects (nanosAsLong/UTC confs the
     # schema read below depends on), not for data: the reference mix now
@@ -4041,7 +4049,11 @@ def q_stream_drift(spark, sf_dir):
         if q.name == "fb_stream_drift":
             q.stop()
     counts = stream_mix_counts(spark, stream_dir, raw_schema)
-    with _bounded_state_parts(spark):
+    # ingested = Σ numInputRows over EVERY progress event of q, counted by a
+    # listener: q.recentProgress keeps only the last few updates
+    # (spark.sql.streaming.numRecentProgressUpdates), so a longer drain
+    # would read as a shortfall
+    with _bounded_state_parts(spark), input_row_counter(spark) as counter:
         q = (
             counts.writeStream.format("memory")
             .queryName("fb_stream_drift")
@@ -4050,6 +4062,7 @@ def q_stream_drift(spark, sf_dir):
             .start()
         )
         _stream_drain(q)
+        ingested = counter.of(q)
     drained = spark.table("fb_stream_drift")
     # whole-corpus reference mix = the bucket-marginal of the drained
     # counts: complete-mode availableNow drains EVERY event row into
@@ -4071,12 +4084,6 @@ def q_stream_drift(spark, sf_dir):
     )
     ref_rows = ref_agg.collect()
     drained_total = sum(int(r["n"]) for r in ref_rows)
-    ingested = 0
-    for p in q.recentProgress:
-        try:
-            ingested += int(p["numInputRows"])
-        except TypeError:
-            ingested += int(p.numInputRows)
     if drained_total != ingested:
         raise RuntimeError(
             f"stream_drift drain shortfall: drained counts sum to "

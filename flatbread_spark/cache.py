@@ -1,6 +1,6 @@
 """Session-scoped registry for operator-persisted DataFrames.
 
-Library operators (pivot base, dedup shingle/signature frames, recall
+Library operators (pivot base, dedup shingle/MinHash frames, recall
 baselines) persist intermediates that the *returned* lazy DataFrame still
 reads, so they cannot unpersist before the caller materializes the result.
 Left alone, those cached frames accumulate for the lifetime of a long-running
@@ -16,8 +16,9 @@ Usage::
     fb.release_caches()              # drop all operator caches
     fb.release_caches("dedup")       # or just one operator family
 
-Tags in use: ``dedup`` (shingle/signature frames; also used by the
-events operator's per-key frame), ``graph`` (edge frames), ``sketch``,
+Tags in use: ``dedup`` (hashed-shingle frames, MinHash signatures and
+chunk hashes — SimHash pairs pin nothing; also used by the events
+operator's per-key frame), ``graph`` (edge frames), ``sketch``,
 ``curation`` (tokenized gate input + outlier medians), ``linkage``
 (the distinct-name vocab), ``lm``
 (the unigram count table — the bigram table is corpus-tailed and

@@ -92,21 +92,32 @@ def lang_scores(text: Column) -> dict[str, Column]:
 
 def lang_id(text: Column) -> Column:
     """Deterministic argmax over marker-word counts; ties resolve in
-    LANG_MARKERS order; zero hits → 'und' (undetermined).
+    LANG_MARKERS order; zero hits → 'und' (undetermined)."""
+    return _lang_argmax(list(lang_scores(text).values()))
 
-    Implemented as ``array_max`` over (score, -order, lang) structs so each
-    per-language score expression appears exactly ONCE in the plan — a naive
-    ``when``-chain argmax embeds every score O(langs) times and multiplies
-    the tokenize+filter work per row."""
-    scores = lang_scores(text)
+
+def _lang_argmax(scores: list[Column]) -> Column:
+    """:func:`lang_id`'s prediction from per-language score columns given
+    in LANG_MARKERS order — lets a caller that also outputs the scores
+    derive the prediction from the SAME columns instead of re-scoring.
+
+    Implemented as ``array_max`` over (score, -order, lang) structs plus an
+    (0, 1, 'und') entry, so each score expression appears exactly ONCE in
+    the plan — a naive ``when``-chain argmax embeds every score O(langs)
+    times and multiplies the tokenize+filter work per row. The 'und' entry
+    wins whenever no score is positive (zero hits, or NULL scores: a struct
+    with a NULL first field orders below it); any positive score beats
+    it, and equal scores break to the earliest language."""
     entries = [
-        F.struct(
-            score.alias("s"), F.lit(-i).alias("no"), F.lit(lang).alias("l")
-        )
-        for i, (lang, score) in enumerate(scores.items())
+        F.struct(score.alias("s"), F.lit(-i).alias("no"), F.lit(lang).alias("l"))
+        for i, (lang, score) in enumerate(zip(LANG_MARKERS, scores))
     ]
-    best = F.array_max(F.array(*entries))
-    return F.when(best["s"] > 0, best["l"]).otherwise(F.lit("und"))
+    entries.append(
+        F.struct(
+            F.lit(0).cast("bigint").alias("s"), F.lit(1).alias("no"), F.lit("und").alias("l")
+        )
+    )
+    return F.array_max(F.array(*entries))["l"]
 
 
 # redaction patterns stay inside the RE2 ∩ java.util.regex common subset so
@@ -636,18 +647,10 @@ def with_mojibake(df, text_col: str):
 def _seg_lang(arr: Column) -> Column:
     """lang_id's argmax over an already-tokenized (lowercased) array —
     same scores, same earliest-lang tie-break, zero hits → 'und'."""
-    entries = [
-        F.struct(
-            F.size(F.filter(arr, lambda t: t.isin(markers)))
-            .cast("bigint")
-            .alias("s"),
-            F.lit(-i).alias("no"),
-            F.lit(lang).alias("l"),
-        )
-        for i, (lang, markers) in enumerate(LANG_MARKERS.items())
-    ]
-    best = F.array_max(F.array(*entries))
-    return F.when(best["s"] > 0, best["l"]).otherwise(F.lit("und"))
+    return _lang_argmax([
+        F.size(F.filter(arr, lambda t: t.isin(markers))).cast("bigint")
+        for markers in LANG_MARKERS.values()
+    ])
 
 
 # per-language bit width for the packed per-token marker code: a segment
@@ -684,19 +687,10 @@ def _packed_lang(packed: Column) -> Column:
     NULL packed word (null text) propagates NULL scores → 'und', exactly
     as the filter form did."""
     mask = (1 << _LANG_BITS) - 1
-    entries = [
-        F.struct(
-            F.shiftright(packed, _LANG_BITS * i)
-            .bitwiseAND(F.lit(mask).cast("bigint"))
-            .cast("bigint")
-            .alias("s"),
-            F.lit(-i).alias("no"),
-            F.lit(lang).alias("l"),
-        )
-        for i, lang in enumerate(LANG_MARKERS.keys())
-    ]
-    best = F.array_max(F.array(*entries))
-    return F.when(best["s"] > 0, best["l"]).otherwise(F.lit("und"))
+    return _lang_argmax([
+        F.shiftright(packed, _LANG_BITS * i).bitwiseAND(F.lit(mask).cast("bigint")).cast("bigint")
+        for i in range(len(LANG_MARKERS))
+    ])
 
 
 def with_lang_segments(df, id_col: str, text_col: str, window_words: int = 20):

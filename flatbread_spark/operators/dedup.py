@@ -16,7 +16,7 @@ n-gram Jaccard, embedding-cosine near-dup. Each is designed shuffle-minimal:
   All expression-level (no Python per row).
 - SimHash: per-token 64-bit hashes bit-voted into a document signature;
   near-dups = signatures within Hamming distance k (verified via xor popcount
-  over band-bucketed candidates).
+  inside one band self-join whose two sides read one reused shuffle).
 - embedding: exact cosine over block-bucketed pairs.
 """
 from __future__ import annotations
@@ -789,24 +789,37 @@ def simhash_pairs(
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance ≤ max_hamming.
 
-    Banding: split the signature into ``bands`` chunks; by pigeonhole any
-    pair within distance < bands shares at least one exact chunk, so the
-    join is on chunk equality, then popcount-verified — which also means the
-    banded result EQUALS the all-pairs result whenever max_hamming < bands
-    (what the SQL oracle exploits). Returns (id_a, id_b, hamming)."""
+    Banding: split the signature into ``bands`` chunks of ``w = nbits //
+    bands`` bits; by pigeonhole any pair within distance < bands shares at
+    least one exact chunk, so the join is on chunk equality, then
+    popcount-verified — which also means the banded result EQUALS the
+    all-pairs result whenever max_hamming < bands (what the SQL oracle
+    exploits).
+
+    One shuffle: the signature is computed once per document, its
+    ``bands`` slim band rows ``(id, sig, band, key)`` are hash-partitioned
+    once by ``(band, key)``, and both sides of the sort-merge self-join
+    read that one exchange (a ``ReusedExchange``) — no persisted signature
+    frame and no shuffle of the candidates. A pair colliding in several
+    bands is kept only from its FIRST colliding band (the lowest ``j`` with
+    ``((sig_a ^ sig_b) >>> j*w) & mask == 0``), so the Hamming test and
+    this rule both run inside the join and each pair is emitted exactly
+    once without a dedup aggregate.
+
+    Ids are expected to be unique: a repeated id yields one row per pair
+    of ROWS (each with its own Hamming distance), not one per id pair.
+    Returns (id_a, id_b, hamming) with id_a < id_b."""
     nbits = 60 if portable_hash else 64
     w = nbits // bands
-    # persist: the banded self-join reads the signature frame on BOTH sides;
-    # without it the full shingle→hash→60-vote aggregation runs twice
-    # (measured ~2× the operator's wall time at sf0.1)
-    sigd = simhash_signatures(df, id_col, text_col, n, portable_hash=portable_hash).transform(_pin)
+    mask = F.lit((1 << w) - 1)
+    sigd = simhash_signatures(df, id_col, text_col, n, portable_hash=portable_hash)
     chunks = sigd.select(
         "__id", "__sig",
         F.explode(
             F.array(*[
                 F.struct(
                     F.lit(i).alias("band"),
-                    F.shiftrightunsigned("__sig", i * w).bitwiseAND(F.lit((1 << w) - 1)).alias("key"),
+                    F.shiftrightunsigned("__sig", i * w).bitwiseAND(mask).alias("key"),
                 )
                 for i in range(bands)
             ])
@@ -815,16 +828,33 @@ def simhash_pairs(
     a, b = chunks.alias("a"), chunks.alias("b")
     xor = F.col("a.__sig").bitwiseXOR(F.col("b.__sig"))
     ham = F.bit_count(xor).cast("int")
+    # first-colliding-band rule: the row of band j survives only if every
+    # lower band's chunks differ, so each pair is emitted once
+    first_band = F.lit(True)
+    for i in range(bands - 1):
+        first_band = first_band & (
+            (F.col("a.__band") <= i)
+            | (F.shiftrightunsigned(xor, i * w).bitwiseAND(mask) != 0)
+        )
+    # coalesce keeps the Hamming test null-tolerant: a null-intolerant
+    # ``ham <= k`` lets Catalyst infer isnotnull(__sig) and push it beneath
+    # the signature projection, where it re-runs the Python UDF as a second
+    # ArrowEvalPython. A null signature has null band keys and never joins,
+    # so the coalesce changes no value.
+    close = F.coalesce(ham, F.lit(nbits + 1)) <= max_hamming
+    # merge hint: both sides then shuffle (ENSURE_REQUIREMENTS) into one
+    # reusable exchange; a broadcast build side is not reused, so the
+    # signature UDF would run once per side
     return (
-        a.join(
+        a.hint("merge").join(
             b,
             (F.col("a.__band") == F.col("b.__band"))
             & (F.col("a.__key") == F.col("b.__key"))
-            & (F.col("a.__id") < F.col("b.__id")),
+            & (F.col("a.__id") < F.col("b.__id"))
+            & close
+            & first_band,
         )
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"), ham.alias("hamming"))
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
     )
 
 

@@ -10,11 +10,16 @@ executed micro-batch's physical plan via ``explainInternal`` — the string
 the golden's streaming fingerprints are counted from. The registry holds
 plain query handles (no Spark resources beyond what the session already
 retains for stopped queries) keyed by sink name, latest drain wins.
+:func:`input_row_counter` counts the rows a drained query ingested from
+every progress update, which ``q.recentProgress`` (a ring buffer capped
+by ``spark.sql.streaming.numRecentProgressUpdates``) cannot.
 """
 from __future__ import annotations
 
 import threading
 from contextlib import contextmanager
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 _LAST_QUERY: dict[str, object] = {}
 
@@ -64,6 +69,57 @@ def drain(q, timeout: int = 300):
     q.awaitTermination(timeout)
     _LAST_QUERY[q.name] = q
     return q
+
+
+class _InputRows(StreamingQueryListener):
+    """Σ numInputRows per query id over every progress event. Listener
+    events arrive asynchronously, but a query's progress events are all
+    delivered before its terminated event, so :meth:`of` waits for that."""
+
+    def __init__(self) -> None:
+        self._rows: dict[str, int] = {}
+        self._done: dict[str, threading.Event] = {}
+        self._lock = threading.Lock()
+
+    def _terminated(self, qid) -> threading.Event:
+        with self._lock:
+            return self._done.setdefault(str(qid), threading.Event())
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        qid = str(event.progress.id)
+        with self._lock:
+            self._rows[qid] = self._rows.get(qid, 0) + int(event.progress.numInputRows)
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        self._terminated(event.id).set()
+
+    def of(self, q, timeout: float = 60.0) -> int:
+        """Rows ``q`` ingested; waits for its terminated event first."""
+        if not self._terminated(q.id).wait(timeout):
+            raise RuntimeError(
+                f"streaming query {q.name!r} reported no termination within "
+                f"{timeout} s, so its ingested-row count is incomplete"
+            )
+        with self._lock:
+            return self._rows.get(str(q.id), 0)
+
+
+@contextmanager
+def input_row_counter(spark):
+    """Yield an :class:`_InputRows` listener registered for the span of the
+    block; start and drain the query inside it, then read ``.of(q)``."""
+    counter = _InputRows()
+    spark.streams.addListener(counter)
+    try:
+        yield counter
+    finally:
+        spark.streams.removeListener(counter)
 
 
 def last_plan(name: str) -> str | None:

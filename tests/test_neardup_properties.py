@@ -14,6 +14,7 @@ cannot flake.
 """
 import re
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -164,3 +165,86 @@ def test_containment_candidate_cap_keeps_verified_exact(spark):
     }
     assert (0, 1) in got and got[(0, 1)] == 1.0  # exact despite the cap
     assert (2, 3) not in got
+
+
+# SimHash: brute force over the operator's own signatures. Exact dups
+# collide in every band; the one-word edits of a 300-word text sit 1 and 2
+# bits from it under both hashes, so the first collides in at least
+# bands - 1 bands. Empty and NULL texts share the empty-text signature.
+BASE = " ".join(f"w{i}" for i in range(300))
+SIMHASH_FIXED = [
+    BASE,
+    BASE,  # exact duplicate
+    BASE.replace("w10 ", "x10 ", 1),  # 1 bit away
+    BASE.replace("w29 ", "x29 ", 1),  # 2 bits away
+    "",
+    None,
+    "alpha",
+]
+
+
+def py_popcount64(x):
+    return bin(x & ((1 << 64) - 1)).count("1")
+
+
+@pytest.mark.parametrize("portable_hash", [False, True], ids=["xx64", "md5_60"])
+@given(docs=corpus, bands=st.sampled_from([3, 4, 5]))
+@settings(**SET)
+def test_simhash_pairs_match_bruteforce(spark, portable_hash, docs, bands):
+    """simhash_pairs equals the all-pairs popcount filter over
+    simhash_signatures whenever max_hamming < bands (pigeonhole), for both
+    band widths (60- and 64-bit signatures), and emits each pair ONCE even
+    when it collides in several bands."""
+    from collections import Counter
+
+    from flatbread_spark.operators.dedup import simhash_pairs, simhash_signatures
+
+    texts = SIMHASH_FIXED + [text_of(d) for d in docs]
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id bigint, text string"
+    )
+    k = bands - 1
+    sigs = {
+        r["__id"]: r["__sig"]
+        for r in simhash_signatures(
+            df, "doc_id", "text", n=2, portable_hash=portable_hash
+        ).collect()
+    }
+    expect = Counter()
+    for a in sigs:
+        for b in sigs:
+            if a < b:
+                ham = py_popcount64(sigs[a] ^ sigs[b])
+                if ham <= k:
+                    expect[(a, b, ham)] += 1
+    got = Counter(
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in simhash_pairs(
+            df, "doc_id", "text", n=2, max_hamming=k, bands=bands,
+            portable_hash=portable_hash,
+        ).collect()
+    )
+    assert got == expect
+    # the fixed rows really hold multi-band near-duplicates
+    assert {(0, 1, 0), (0, 2, 1), (0, 3, 2), (4, 5, 0)} <= set(expect)
+
+
+def test_simhash_pairs_one_reused_shuffle(spark, documents):
+    """The band rows are shuffled once and both join sides read that
+    exchange: no persisted signature frame, one executed scan of the
+    input, no aggregate above the join."""
+    from flatbread_spark import cache
+    from flatbread_spark.operators.dedup import simhash_pairs
+
+    before = cache.pinned_tags()
+    out = simhash_pairs(documents, "doc_id", "text", portable_hash=True)
+    out.collect()
+    assert cache.pinned_tags() == before
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "ReusedExchange" in final
+    assert final.count("FileScan parquet") == 1
+    assert final.count("ArrowEvalPython") == 1
+    assert "SortMergeJoin" in final
+    assert "InMemoryRelation" not in final
+    assert "Aggregate" not in final

@@ -438,3 +438,23 @@ def test_drift_counts_novel_category_matches_batch(spark):
     ref_rows = spark.createDataFrame([("A",)] * 100, "c string")
     batch = tvd_drift(ref_rows, win_rows, "c").collect()[0]
     assert batch["tvd_ppm"] == row["tvd_ppm"] == 900000
+
+
+def test_stream_drift_drain_check_counts_every_batch(spark):
+    """stream_drift checks its drained total against the rows the stream
+    ingested, counted over every progress update: with
+    numRecentProgressUpdates at 1, Spark's recentProgress buffer keeps
+    none of the drain's batches, and a check that summed it reported a
+    false "drain shortfall"."""
+    import __spark_entry__ as entry
+    from flatbread_spark.streaming.replay import _LAST_QUERY
+
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        rows = entry.q_stream_drift(spark, SF_DIR).collect()
+    finally:
+        spark.conf.set(key, before)
+    assert not _LAST_QUERY["fb_stream_drift"].recentProgress
+    assert rows and sum(r["n_window"] for r in rows) > 0
