@@ -2186,12 +2186,10 @@ def _knn_recall(approx: DataFrame, exact: DataFrame, k: int) -> DataFrame:
     stops paying per-lineage AQE stage-jobs through the uncached
     baseline."""
     from flatbread_spark.cache import pin
+    from flatbread_spark.frame import local_relation
 
     exact = pin(exact, tag="knn_recall")
-    ex_proj = exact.select("query_id", "neighbor_id")
-    exact = exact.sparkSession.createDataFrame(
-        ex_proj.collect(), ex_proj.schema
-    )
+    exact, _ = local_relation(exact.select("query_id", "neighbor_id"))
     hits = exact.select("query_id", "neighbor_id").join(
         approx.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"],
         "left_semi",

@@ -1,12 +1,13 @@
 """Session-scoped registry for operator-persisted DataFrames.
 
-Library operators (pivot base, dedup shingle/MinHash frames, recall
-baselines) persist intermediates that the *returned* lazy DataFrame still
-reads, so they cannot unpersist before the caller materializes the result.
-Left alone, those cached frames accumulate for the lifetime of a long-running
-driver (ADVICE r2). Every such persist now goes through :func:`pin`, which
-records the handle here; callers (or a session janitor) reclaim executor
-memory with :func:`release` once results are materialized/written.
+Library operators (large FlatFrame inputs, dedup shingle/MinHash frames,
+recall baselines) persist intermediates that the *returned* lazy DataFrame
+still reads, so they cannot unpersist before the caller materializes the
+result. Left alone, those cached frames accumulate for the lifetime of a
+long-running driver (ADVICE r2). Every such persist now goes through
+:func:`pin`, which records the handle here; callers (or a session janitor)
+reclaim executor memory with :func:`release` once results are
+materialized/written.
 
 Usage::
 
@@ -24,10 +25,11 @@ operator's per-key frame), ``graph`` (edge frames), ``sketch``,
 (the unigram count table — the bigram table is corpus-tailed and
 deliberately NOT cached, ADVICE r10), ``skew`` (join_estimate's per-key
 counts), ``pca`` (the moment aggregate — pca_train releases it itself
-with :func:`unpin` after collecting), ``pivot`` (the
-``sources.pivot.pivot_table`` output), ``frame`` (a
-``FlatFrame.from_df`` input pinned before its position probe), plus the
-entry module's ``knn_recall``/``ivf_sweep`` memoized baselines.
+with :func:`unpin` after collecting), ``frame`` (a
+``FlatFrame.from_df`` input — e.g. a pivot output — larger than
+``engine.pos_auto_threshold`` rows, kept for its ranged positions; a
+smaller one is unpinned as soon as it is collected into a local relation),
+plus the entry module's ``knn_recall``/``ivf_sweep`` memoized baselines.
 """
 from __future__ import annotations
 

@@ -85,7 +85,8 @@ DEFAULTS_STATIC: dict[str, Any] = {
     },
     # engine knobs (no reference equivalent — Spark-side scale policy)
     "engine": {
-        # from_df(pos_strategy="auto"): frames larger than this get ranged
+        # from_df(pos_strategy="auto"): frames up to this many rows are
+        # collected into a local relation; larger ones get ranged
         # (two-phase) __pos__ assignment instead of a single-task window
         "pos_auto_threshold": 100_000,
         # embedding_dup_pairs with no candidate-generation key refuses the

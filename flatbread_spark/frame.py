@@ -25,9 +25,12 @@ no attrs. ``FlatFrame`` supplies all three on top of a plain ``pyspark.sql.DataF
 
 Scale notes: a FlatFrame is a *presentation-shaped* table (a pivot output —
 cardinality = number of groups), but all construction paths (``pivot_table``)
-consume arbitrarily large inputs through shuffle-based groupBy. Nothing here
-collects to the driver; margins are unions of small aggregate DataFrames that
-Spark broadcasts implicitly.
+consume arbitrarily large inputs through shuffle-based groupBy. ``from_df``
+collects the constructed frame once, bounded by ``engine.pos_auto_threshold``
++ 1 rows, and puts it back into the plan as a single-partition local
+relation (:func:`local_relation`), so margins, percentages and displays over
+it run in one stage without re-deriving the fact-scale lineage. A frame
+above the bound stays distributed (ranged positions, pinned input).
 """
 from __future__ import annotations
 
@@ -125,6 +128,29 @@ def make_col_name(labels: tuple, existing: Iterable[str]) -> str:
     return name
 
 
+def local_relation(
+    df: DataFrame, max_rows: int | None = None
+) -> tuple[DataFrame | None, int]:
+    """Collect ``df`` once and put its rows back into the plan as a
+    ``LocalRelation``: ``(frame, row count)``.
+
+    The rows stay on the JVM (``collectAsList`` → ``createDataFrame``), so
+    values are exact — NaN stays distinct from NULL, decimals and ``-0.0``
+    keep their bits — and a plan over the frame scans no Python RDD, unlike
+    ``createDataFrame`` over collected Python rows. With ``max_rows`` at
+    most ``max_rows + 1`` rows are collected, and ``(None, n)`` comes back
+    when ``df`` has more than ``max_rows``. Collecting an ordered ``df``
+    keeps its order in the local relation."""
+    q = df if max_rows is None else df.limit(max_rows + 1)
+    rows = q._jdf.collectAsList()
+    n = rows.size()
+    if max_rows is not None and n > max_rows:
+        return None, n
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(rows, q._jdf.schema())
+    return DataFrame(jdf, spark), n
+
+
 @dataclass(frozen=True)
 class ColInfo:
     """One value column: its column-MultiIndex label tuple + physical name."""
@@ -159,11 +185,11 @@ class FlatFrame:
         self.labels = {k: list(v) for k, v in (labels or {}).items()}
         self.formats = dict(formats or {})
         self.nmargin = nmargin
-        # True when from_df's bounded probe chose the range-partitioned pos
-        # path, i.e. the frame exceeds engine.pos_auto_threshold. Downstream
-        # order-dependent ops (apportioned rounding) use this to avoid
-        # re-probing AND to avoid funneling a large frame through an
-        # unpartitioned window (VERDICT r4 #3).
+        # True when from_df's bounded collect chose the range-partitioned
+        # pos path, i.e. the frame exceeds engine.pos_auto_threshold.
+        # Downstream order-dependent ops (apportioned rounding) use this to
+        # avoid re-checking the size AND to avoid funneling a large frame
+        # through an unpartitioned window (VERDICT r4 #3).
         self.pos_ranged = bool(pos_ranged)
 
     # ------------------------------------------------------------------ basics
@@ -215,14 +241,19 @@ class FlatFrame:
         - ``"ranged"`` — the range-partitioned two-phase rank
           (:func:`flatbread_spark.operators.ranking.scalable_pos` —
           identical output, no single-task stage).
-        - ``"auto"`` (default) — bounded probe: count at most
-          ``engine.pos_auto_threshold`` (config, default 100 000) + 1 rows
-          and pick ``window`` below the threshold, ``ranged`` above it, so a
-          high-cardinality lift can never serialize through one task
-          (VERDICT r2 #3). The probe reads the input's cache when the caller
-          (e.g. ``pivot_table``) already persists; otherwise the frame is
-          pinned first (:mod:`flatbread_spark.cache`) so probe + downstream
-          compute the lineage once.
+        - ``"auto"`` (default) — one bounded, ordered collect of at most
+          ``engine.pos_auto_threshold`` (config, default 100 000) + 1 rows.
+          A frame within the threshold re-enters the plan as a
+          single-partition local relation (:func:`local_relation`) whose
+          ``row_number`` runs inside its one stage, so the operators
+          chained on it never re-derive the input lineage; no cache is
+          kept. A larger frame takes ``ranged`` positions, so a
+          high-cardinality lift never serializes through one task (VERDICT
+          r2 #3); its input is pinned first (:mod:`flatbread_spark.cache`,
+          tag ``frame``) so the collect and the ranged positions compute
+          the lineage once. A caller's own persisted input is read, never
+          pinned or unpersisted. Streaming input and a threshold <= 0 take
+          ``window``.
         """
         index = list(index)
         if value_cols is None:
@@ -243,23 +274,25 @@ class FlatFrame:
         if POS not in df.columns:
             ob = list(order_by) if order_by is not None else [F.col(c) for c in index]
             if pos_strategy == "auto":
-                if df.isStreaming:
-                    pos_strategy = "window"  # no eager probe on a stream
-                else:
-                    from flatbread_spark.cache import pin
-                    from flatbread_spark.config import CONFIG
+                from flatbread_spark.config import CONFIG
 
-                    threshold = int(
-                        CONFIG.get("engine", "pos_auto_threshold", default=100_000)
-                    )
-                    if threshold <= 0:
-                        # probe disabled (benchmark / known-small deployments)
-                        pos_strategy = "window"
+                threshold = int(
+                    CONFIG.get("engine", "pos_auto_threshold", default=100_000)
+                )
+                if df.isStreaming or threshold <= 0:
+                    # no eager collect on a stream; <= 0 disables it
+                    pos_strategy = "window"
+                else:
+                    from flatbread_spark.cache import pin, unpin
+
+                    pinned = df if src_persisted else pin(df, tag="frame")
+                    local, _ = local_relation(pinned.orderBy(*ob), threshold)
+                    if local is None:
+                        df, pos_strategy = pinned, "ranged"
                     else:
                         if not src_persisted:
-                            df = pin(df, tag="frame")
-                        probe = df.limit(threshold + 1).count()
-                        pos_strategy = "ranged" if probe > threshold else "window"
+                            unpin(pinned)
+                        df, pos_strategy = local.coalesce(1), "window"
             if pos_strategy == "ranged":
                 from flatbread_spark.operators.ranking import scalable_pos
 
@@ -437,12 +470,6 @@ class FlatFrame:
                 [c.labels for c in self.cols], names=self.col_names
             )
         return data
-
-    def unpersist(self) -> "FlatFrame":
-        """Release the cache pinned at the pivot boundary (see
-        ``sources.pivot.pivot_table(persist=True)``); no-op if not cached."""
-        self.df.unpersist()
-        return self
 
     def __repr__(self) -> str:  # pragma: no cover
         return (

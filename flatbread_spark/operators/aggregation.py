@@ -7,9 +7,11 @@ level L gets key ``(g0..gL, label, fill…)`` (``aggregation.py:56-70``).
 
 Spark-first design (NOT a port):
 
-- axis=0 margin = ``filter(data_mask) → agg/groupBy().agg → unionByName``.
-  The margin row is a 1-row (or #groups-row) DataFrame; Catalyst broadcasts it
-  in the union. No row is ever "inserted" — position is data (``__pos__``).
+- axis=0 margin = one global aggregate whose cells each see only the data
+  rows (``fn(when(data_mask, x))``) and which also takes ``max(__pos__)``
+  over all rows, ``→ unionByName``; subtotals are
+  ``filter(data_mask) → groupBy().agg``. No row is ever "inserted" —
+  position is data (``__pos__``).
 - axis=1 margin = a new *column* built from a per-row expression over the value
   columns (``flatbread_spark.aggfuncs.row_wise``) — zero shuffle, stays inside
   whole-stage codegen. The reference transposes instead
@@ -25,7 +27,7 @@ from __future__ import annotations
 
 from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flatbread_spark.aggfuncs import column_agg, get_label, nan_safe, row_wise
@@ -85,6 +87,19 @@ def _callable_agg_row(
     )
 
 
+def _masked_agg(aggfunc: str, x: Column, mask: Column) -> Column:
+    """``aggfunc`` over the rows where ``mask`` holds, as one aggregate
+    over all rows (the value of ``filter(mask).agg(fn(x))``). ``first`` /
+    ``last`` wrap the value in a struct so a NULL value on a masked-in row
+    is still picked, while the masked-out rows (NULL structs) are skipped."""
+    fn = column_agg(aggfunc)
+    if aggfunc == "size":
+        return F.count(F.when(mask, F.lit(1)))
+    if aggfunc in ("first", "last"):
+        return fn(F.when(mask, F.struct(x.alias("v"))), ignorenulls=True)["v"]
+    return fn(F.when(mask, x))
+
+
 def add_agg(
     ff: FlatFrame,
     aggfunc: str | Callable,
@@ -108,17 +123,18 @@ def add_agg(
     _check_duplicate_key(ff, key)
 
     vnames = ff.value_names
+    # place after the current last row; max over ALL rows incl. earlier margins
+    maxpos = (F.coalesce(F.max(POS), F.lit(0.0)) + 1.0).alias(POS)
     if callable(aggfunc):
         agg_row = _callable_agg_row(ff.df.filter(mask), vnames, aggfunc, *args, **kwargs)
+        agg_row = agg_row.crossJoin(ff.df.agg(maxpos))
     else:
-        fn = column_agg(aggfunc)
-        agg_row = ff.df.filter(mask).agg(
-            *[fn(nan_safe(ff.df, c)).alias(c) for c in vnames]
+        # one aggregate over all rows: each cell sees only the data rows
+        agg_row = ff.df.agg(
+            *[_masked_agg(aggfunc, nan_safe(ff.df, c), mask).alias(c) for c in vnames],
+            maxpos,
         )
-
-    # place after the current last row; max over ALL rows incl. earlier margins
-    maxpos = ff.df.agg((F.coalesce(F.max(POS), F.lit(0.0)) + 1.0).alias(POS))
-    row = agg_row.crossJoin(maxpos).select(
+    row = agg_row.select(
         *[F.lit(k).cast("string").alias(c) for k, c in zip(key, ff.index)],
         *vnames,
         POS,

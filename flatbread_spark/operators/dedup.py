@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flatbread_spark.cache import pin
+from flatbread_spark.frame import local_relation
 from flatbread_spark.functions.text import fingerprint_md5, with_shingles, word_shingles
 from flatbread_spark.functions.vectors import cosine_exact
 
@@ -586,11 +587,8 @@ def minhash_probe(
             .drop("__m")
         )
         with no_adaptive_execution(bands_c.sparkSession):
-            over_rows = over_agg.collect()
-        if over_rows:
-            over = bands_c.sparkSession.createDataFrame(
-                over_rows, over_agg.schema
-            )
+            over, n_over = local_relation(over_agg)
+        if n_over:
             small_c = bands_c.join(
                 F.broadcast(over), ["__band", "__key"], "left_anti",
             )
@@ -678,11 +676,8 @@ def minhash_lsh_pairs(
             .drop("__m")
         )
         with no_adaptive_execution(bands_df.sparkSession):
-            over_rows = over_agg.collect()
-        if over_rows:
-            over = bands_df.sparkSession.createDataFrame(
-                over_rows, over_agg.schema
-            )
+            over, n_over = local_relation(over_agg)
+        if n_over:
             small = bands_df.join(
                 F.broadcast(over), ["__band", "__key"], "left_anti",
             )

@@ -32,6 +32,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from flatbread_spark.frame import local_relation
 from flatbread_spark.functions.vectors import cosine_exact, cosine_fast
 
 
@@ -109,7 +110,8 @@ def _all_pairs(
     q = queries.select(
         F.col(id_col).alias("query_id"), vec.alias("__qv"), sv.alias("__sv")
     )
-    q_rows = q.collect()
+    q, _ = local_relation(q)
+    q_rows = q.collect()  # a local relation: no job
     kernel = make_knn_shortlist_fn(
         [r["query_id"] for r in q_rows], [r["__sv"] for r in q_rows], depth, score
     )
@@ -123,10 +125,7 @@ def _all_pairs(
         f"__fast {'bigint' if int8 else 'double'}, "
         f"__cv {c.schema[c.columns[-1]].dataType.simpleString()}",
     )
-    qvecs = corpus.sparkSession.createDataFrame(q_rows, q.schema).select(
-        "query_id", "__qv"
-    )
-    return cands, qvecs
+    return cands, q.select("query_id", "__qv")
 
 
 def knn_bruteforce(

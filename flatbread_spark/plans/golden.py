@@ -18,6 +18,15 @@ construction DRAINS a stream (the replay harnesses) are excluded because
 their batch result plan is a trivial LocalTableScan with no structure to
 pin.
 
+Besides the plan facts, each fingerprint records ``build_jobs``: the Spark
+jobs run while the query's DataFrame is built (the job-id high-water mark
+before and after the build call). Work folded into a build-time collect —
+a bounded frame that re-enters the plan as a local relation — leaves the
+returned plan, so its scans and exchanges no longer show in the plan
+facts; ``build_jobs`` keeps it visible. Every parquet table of the golden
+``sf_dir`` has its schema inferred before the first query, so no query is
+charged for a first read.
+
 Regenerate DELIBERATELY after a plan-shape change you intend:
 
     python scripts/plan_audit.py --write-golden
@@ -121,7 +130,15 @@ def collect_fingerprints(spark, verbose: bool = False) -> dict[str, dict[str, in
     import __spark_entry__ as _entry
 
     from flatbread_spark.cache import release
+    from flatbread_spark.sources.tables import load_table
 
+    # build_jobs must not depend on which query first read a table: infer
+    # every table's schema up front (sources.tables memoizes it per session)
+    sf_dir = GOLDEN_ENV["sf_dir"]
+    for fname in sorted(os.listdir(sf_dir)):
+        if fname.endswith(".parquet"):
+            load_table(spark, sf_dir, fname[: -len(".parquet")])
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
     out: dict[str, dict[str, int]] = {}
     for name, fn in _entry.queries().items():
         if name in SKIP:
@@ -141,7 +158,10 @@ def collect_fingerprints(spark, verbose: bool = False) -> dict[str, dict[str, in
         for _tag in ENTRY_PIN_TAGS:
             release(tag=_tag)
         spark.catalog.clearCache()
-        out[name] = plan_facts(fn(spark, GOLDEN_ENV["sf_dir"]))
+        j0 = dag.numTotalJobs()
+        df = fn(spark, sf_dir)
+        build_jobs = dag.numTotalJobs() - j0
+        out[name] = {**plan_facts(df), "build_jobs": build_jobs}
         if verbose:
             line = " ".join(f"{k}={v}" for k, v in out[name].items() if v)
             print(f"{name}: {line}")

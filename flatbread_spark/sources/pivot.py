@@ -34,7 +34,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, NumericType
 
-from flatbread_spark.cache import pin
 from flatbread_spark.aggfuncs import column_agg, nan_safe
 from flatbread_spark.frame import ColInfo, FlatFrame, make_col_name
 
@@ -95,21 +94,18 @@ def pivot_table(
     aggfunc: str = "sum",
     column_values: Sequence[Any] | None = None,
     fill_value: Any = None,
-    persist: bool = True,
 ) -> FlatFrame:
     """Spark analog of ``pd.pivot_table`` returning a FlatFrame.
 
     index/columns/values are column names of ``df``; ``aggfunc`` is a named
     aggregate (JVM built-in — see ``flatbread_spark.aggfuncs``).
 
-    ``persist`` (default on) caches the pivot output. This is THE scale
-    decision of the margin pipeline: every margin/percentage op references
-    the pivot result from two or more plan branches (data + aggregate), and
-    without a persist each branch re-derives it from the fact-table scan —
-    a chained totals+percentages plan was measured re-scanning the fact
-    table 3×. The pivot boundary is exactly where cardinality collapses from
-    fact-scale to presentation-scale (#groups), so the cache is KB-sized
-    while the savings are full scans+shuffles of the input.
+    The pivot output is where cardinality collapses from fact scale to
+    presentation scale (#groups). ``FlatFrame.from_df`` collects it there
+    once and puts it back into the plan as a local relation, so the
+    margin/percentage branches chained on it never re-run the fact-table
+    scan and aggregate; a pivot of more than ``engine.pos_auto_threshold``
+    rows stays distributed on a pinned input instead (see ``from_df``).
     """
     index = [index] if isinstance(index, str) else list(index)
     columns = (
@@ -122,8 +118,6 @@ def pivot_table(
 
     if not columns:
         agged = df.groupBy(*index).agg(*[fn(nan_safe(df, v)).alias(v) for v in values])
-        if persist:
-            agged = pin(agged, tag="pivot")
         ff = FlatFrame.from_df(agged, index=index)
         ff.col_names = [None]
         return ff
@@ -178,8 +172,6 @@ def pivot_table(
     cells.sort(key=lambda c: c[0].labels)
     if spark_pivot:
         out = out.select(*index, *[e for _, e in cells])
-    if persist:
-        out = pin(out, tag="pivot")
     return FlatFrame.from_df(
         out,
         index=index,

@@ -1,11 +1,26 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@contextmanager
+def pos_auto_threshold(value):
+    """Override ``engine.pos_auto_threshold`` (0 disables ``from_df``'s
+    collect, leaving the pivot's own plan in the frame)."""
+    from flatbread_spark.config import CONFIG
+
+    before = CONFIG.get("engine", "pos_auto_threshold", default=100_000)
+    CONFIG.update_runtime({"engine": {"pos_auto_threshold": value}})
+    try:
+        yield
+    finally:
+        CONFIG.update_runtime({"engine": {"pos_auto_threshold": before}})
 
 
 @pytest.fixture(scope="session")

@@ -15,7 +15,9 @@ Counts (not line numbers) so ordinary refactors don't churn the test; the
 per-file bound notes are the audit trail.
 
 Counting is AST-based (ADVICE r11): a ``Call`` whose func is an
-``Attribute`` named ``collect``/``toPandas``. Substring counting both
+``Attribute`` named ``collect``/``collectAsList``/``toPandas`` — the JVM
+``collectAsList`` (through ``df._jdf``) materializes the rows just the
+same, so it is counted too. Substring counting both
 missed sites (``.collect(`` after a ``#`` inside a string literal) and
 counted phantom ones (``.collect(`` mentioned in a docstring), so the
 ratchet could drift for non-code reasons; the AST sees only real call
@@ -32,12 +34,11 @@ COLLECT_ALLOWLIST = {
     "operators/tokenizer.py": (1, "BPE pair-count table: vocabulary-bounded (top pairs after min_count)"),
     "operators/sampling.py": (3, "group counts for exact allocation (group-bounded) + 1-row FPS seed + greedy FPS state (k rows, k = requested sample)"),
     "operators/kmeans.py": (2, "k seed vectors + per-(cluster,dim) update rows: both k*dim model-bounded"),
-    "operators/similarity.py": (1, "all-pairs generator query set (knn_bruteforce, knn_quantized, mmr_rerank): small by contract (the old plans already broadcast it — same driver footprint), feeds the shortlist kernel's captured matrix"),
+    "operators/similarity.py": (1, "all-pairs generator query set (knn_bruteforce, knn_quantized, mmr_rerank), read back from its local relation (no job): small by contract (the old plans already broadcast it — same driver footprint), feeds the shortlist kernel's captured matrix"),
     "operators/trend.py": (2, "single aggregate rows (slope/anomaly scalars): 1 row each"),
     "operators/pca.py": (3, "d*d covariance moment aggregate (collected once; doubles as the pin materialization) + d*d covariance table in pca_train + d-row component table: all dimension-bounded"),
     "operators/graph.py": (2, "union-find edge probe hard-capped at driver_max_edges+1 (fails loudly past the cap) + 1-row count"),
     "operators/lm.py": (1, "trigram LM model table: vocabulary-bounded (min_count-filtered)"),
-    "operators/dedup.py": (2, "minhash over-cap bucket lists (probe + self-join): <= |band rows|/max_band_bucket rows by construction — the same bound that let the old plan broadcast them"),
     "operators/ranking.py": (3, "per-partition boundary stats (partitions rows) + range-bound rows + 1-row total"),
     "operators/curation.py": (2, "per-gate funnel summary (gate-count rows) + vocab_overlap per-group vocabulary sizes (#groups rows — the old plan already broadcast them to the driver)"),
     "operators/vocabulary.py": (1, "characteristic_terms per-group token totals: #groups rows — the old plan already broadcast them to the driver"),
@@ -45,12 +46,18 @@ COLLECT_ALLOWLIST = {
     "output/tablespec.py": (2, "display/export sink: truncation-limited presentation rows by contract"),
     "output/excel.py": (1, "export sink: presentation-sized by contract (same class as tablespec)"),
 }
+# JVM-side collects: the rows stay in the JVM and re-enter the plan as a
+# local relation (frame.local_relation); they are materialized all the same
+COLLECT_AS_LIST_ALLOWLIST = {
+    "frame.py": (1, "local_relation: FlatFrame.from_df collects at most engine.pos_auto_threshold + 1 presentation rows; its other callers (the minhash over-cap bucket lists, <= |band rows|/max_band_bucket rows by construction; the all-pairs query set) are bounded as noted at their files"),
+}
 TOPANDAS_ALLOWLIST = {
     "frame.py": (1, "FlatFrame.to_pandas(): presentation sink for margin tables, documented driver-sized"),
 }
 
 _CALL = {
     "collect": COLLECT_ALLOWLIST,
+    "collectAsList": COLLECT_AS_LIST_ALLOWLIST,
     "toPandas": TOPANDAS_ALLOWLIST,
 }
 

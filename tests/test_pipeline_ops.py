@@ -455,15 +455,20 @@ def test_cache_registry_release(spark, lineitem):
     import flatbread_spark as fb
     from flatbread_spark import cache as fc
 
+    from tests.conftest import pos_auto_threshold
+
     before = len(fc.pinned_tags())
-    fb.pivot_table(
-        lineitem, index="l_returnflag", columns="l_linestatus",
-        values="l_quantity", aggfunc="sum",
-    ).to_df().collect()
-    assert "pivot" in fc.pinned_tags()
-    released = fb.release_caches("pivot")
+    # a pivot above engine.pos_auto_threshold rows keeps its pinned input
+    # for the ranged positions (a smaller one is collected and unpinned)
+    with pos_auto_threshold(2):
+        fb.pivot_table(
+            lineitem, index="l_returnflag", columns="l_linestatus",
+            values="l_quantity", aggfunc="sum",
+        ).to_df().collect()
+    assert "frame" in fc.pinned_tags()
+    released = fb.release_caches("frame")
     assert released >= 1
-    assert "pivot" not in fc.pinned_tags()
+    assert "frame" not in fc.pinned_tags()
     fb.release_caches()
     assert len(fc.pinned_tags()) == 0 <= before
 

@@ -10,6 +10,8 @@ from flatbread_spark.aggfuncs import COLUMN_AGGS, column_agg, nan_safe
 from flatbread_spark.sources import pivot as pivot_mod
 from flatbread_spark.sources.pivot import PivotCardinalityError
 
+from tests.conftest import pos_auto_threshold
+
 
 def _src(spark):
     pdf = pd.DataFrame(
@@ -123,8 +125,7 @@ def test_pivot_matches_spark_pivot(spark, monkeypatch, aggfunc, spark_plan):
         monkeypatch.setattr(pivot_mod, "MAX_ONE_AGG_KEYS", 3)
     df = _sparse(spark)
     values = ["unit_qty", "net_amt"]
-    ff = pivot_table(df, index="k", columns="s", values=values, aggfunc=aggfunc,
-                     persist=False)
+    ff = pivot_table(df, index="k", columns="s", values=values, aggfunc=aggfunc)
     assert sorted(c.labels for c in ff.cols) == [
         (key, v) for key in ("F", "O", "null") for v in sorted(values)
     ]
@@ -136,9 +137,14 @@ def test_pivot_matches_spark_pivot(spark, monkeypatch, aggfunc, spark_plan):
             name = next(c.name for c in ff.cols
                         if c.labels == ("null" if key is None else key, v))
             assert _same(got[k][name], expect), (aggfunc, k, key, v, got[k][name], expect)
-    # one-aggregate plan: one shuffle, no PivotFirst and its second exchange
-    plan = ff.df._jdf.queryExecution().executedPlan().toString()
+    # one-aggregate plan: one shuffle, no PivotFirst and its second exchange.
+    # The default frame is the collected pivot re-entered as a local
+    # relation, so the plan is read with the collect disabled.
+    with pos_auto_threshold(0):
+        lazy = pivot_table(df, index="k", columns="s", values=values, aggfunc=aggfunc)
+    plan = lazy.df._jdf.queryExecution().executedPlan().toString()
     assert ("pivotfirst" in plan.lower()) == spark_plan
+    assert "LocalTableScan" in ff.df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.mark.parametrize("aggfunc", ["first", "last", "min", "max", "count"])
@@ -149,7 +155,7 @@ def test_pivot_matches_spark_pivot_string_values(spark, aggfunc):
     The one-aggregate pivot keeps both behaviours."""
     df = _sparse(spark).withColumn("tag", F.col("net_amt").cast("string"))
     ff = pivot_table(df, index="k", columns="s", values="tag", aggfunc=aggfunc,
-                     column_values=["F", "O"], persist=False)
+                     column_values=["F", "O"])
     got = {r["k"]: (r["F"], r["O"]) for r in ff.df.collect()}
     want = _spark_pivot(df, ["tag"], aggfunc, ["F", "O"])
     assert got == {k: (c[("F", "tag")], c[("O", "tag")]) for k, c in want.items()}
@@ -165,7 +171,7 @@ def test_pivot_max_values_error(spark):
         with pytest.raises(PivotCardinalityError, match="pivotMaxValues=2"):
             pivot_table(df, index="k", columns="s", values="unit_qty")
         ff = pivot_table(df, index="k", columns="s", values="unit_qty",
-                         column_values=["F", "O", "X"], persist=False)
+                         column_values=["F", "O", "X"])
         assert [c.labels for c in ff.cols] == [("F",), ("O",), ("X",)]
     finally:
         spark.conf.set("spark.sql.pivotMaxValues", before)
@@ -179,7 +185,7 @@ def test_pivot_without_keys_keeps_index_groups(spark, column_values):
     if column_values is None:
         df = df.where(F.lit(False))
     ff = pivot_table(df, index="k", columns="s", values="unit_qty",
-                     column_values=column_values, persist=False)
+                     column_values=column_values)
     assert ff.cols == []
     want = df.groupBy("k").pivot("s", column_values).agg(F.sum("unit_qty"))
     assert want.columns == ["k"]

@@ -68,7 +68,6 @@ def test_tabulate_pass_recompiles_no_class(spark):
     def one_pass():
         for fn in fns:
             fn(spark, SF_DIR).collect()
-        cache.release("pivot")
         cache.release("frame")
 
     one_pass()

@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 from flatbread_spark import FlatFrame
+from flatbread_spark.aggfuncs import COLUMN_AGGS
 from flatbread_spark.operators.aggregation import add_agg, add_subagg
 from flatbread_spark.operators.totals import (
     add_subtotals,
@@ -276,3 +277,37 @@ def test_rollup_subtotals_matches_chained(spark, lineitem):
     grp = pdf.groupby("l_returnflag")["l_quantity"].sum()
     for g in grp.index:
         assert abs(sub.loc[g, "qty"] - grp.loc[g]) < 1e-6
+
+
+@pytest.mark.parametrize("aggfunc", sorted(COLUMN_AGGS))
+def test_add_agg_one_aggregate_matches_filter_crossjoin(spark, aggfunc):
+    """axis=0 add_agg runs one aggregate (each cell masked to the data
+    rows, max(__pos__) over all rows); it equals the filter + aggregate +
+    crossJoin(max pos) plan it replaced, over a frame that already holds
+    margin rows and NULL/NaN cells."""
+    from pyspark.sql import functions as F
+
+    from flatbread_spark.aggfuncs import column_agg, nan_safe
+    from flatbread_spark.frame import POS
+
+    rows = [("r1", 1.0, None, 5.0), ("r2", None, None, -2.5),
+            ("r3", 3.0, None, 0.0), ("r4", 3.0, None, 7.25),
+            ("r5", float("nan"), None, 1.0)]
+    src = spark.createDataFrame(rows, "k string, a double, b double, c double")
+    ff = add_totals(FlatFrame.from_df(src, index=["k"]), axis=0)
+    ff = add_agg(ff, "sum", axis=0, label="Sum")
+    mask = ff.data_row_mask(["Totals", "Sum"])
+    fn = column_agg(aggfunc)
+    old = ff.df.filter(mask).agg(
+        *[fn(nan_safe(ff.df, c)).alias(c) for c in ff.value_names]
+    ).crossJoin(
+        ff.df.agg((F.coalesce(F.max(POS), F.lit(0.0)) + 1.0).alias(POS))
+    ).first()
+    out = add_agg(ff, aggfunc, axis=0, label="X", ignore_keys=["Totals", "Sum"])
+    new = out.df.filter(F.col("k") == "X").first()
+
+    def canon(v):  # the union widens the margin row to the frame's types
+        return None if v is None else repr(float(v))
+
+    for c in ff.value_names + [POS]:
+        assert canon(new[c]) == canon(old[c]), (aggfunc, c, new[c], old[c])
