@@ -26,9 +26,10 @@ operator's per-key frame), ``graph`` (edge frames), ``sketch``,
 deliberately NOT cached, ADVICE r10), ``skew`` (join_estimate's per-key
 counts), ``pca`` (the moment aggregate — pca_train releases it itself
 with :func:`unpin` after collecting), ``frame`` (a
-``FlatFrame.from_df`` input — e.g. a pivot output — larger than
-``engine.pos_auto_threshold`` rows, kept for its ranged positions; a
-smaller one is unpinned as soon as it is collected into a local relation),
+``FlatFrame.from_df`` input — e.g. a pivot output — too large to
+re-enter the plan as a local relation, pinned after its bounded collect
+and kept for its window or ranged positions; a smaller one is never
+pinned),
 plus the entry module's ``knn_recall``/``ivf_sweep`` memoized baselines.
 """
 from __future__ import annotations

@@ -104,8 +104,9 @@ def pivot_table(
     presentation scale (#groups). ``FlatFrame.from_df`` collects it there
     once and puts it back into the plan as a local relation, so the
     margin/percentage branches chained on it never re-run the fact-table
-    scan and aggregate; a pivot of more than ``engine.pos_auto_threshold``
-    rows stays distributed on a pinned input instead (see ``from_df``).
+    scan and aggregate; a pivot above ``engine.pos_auto_threshold`` rows or
+    ``frame.LOCAL_FRAME_BYTES`` stays distributed on a pinned input
+    instead (see ``from_df``).
     """
     index = [index] if isinstance(index, str) else list(index)
     columns = (

@@ -49,7 +49,7 @@ COLLECT_ALLOWLIST = {
 # JVM-side collects: the rows stay in the JVM and re-enter the plan as a
 # local relation (frame.local_relation); they are materialized all the same
 COLLECT_AS_LIST_ALLOWLIST = {
-    "frame.py": (1, "local_relation: FlatFrame.from_df collects at most engine.pos_auto_threshold + 1 presentation rows; its other callers (the minhash over-cap bucket lists, <= |band rows|/max_band_bucket rows by construction; the all-pairs query set) are bounded as noted at their files"),
+    "frame.py": (1, "local_relation: FlatFrame.from_df collects at most min(engine.pos_auto_threshold, LOCAL_FRAME_BYTES / estimated row size) + 1 presentation rows, through a plain limit that takes at most that many from each partition it scans; its other callers (the minhash over-cap bucket lists, <= |band rows|/max_band_bucket rows by construction; the all-pairs query set) are bounded as noted at their files"),
 }
 TOPANDAS_ALLOWLIST = {
     "frame.py": (1, "FlatFrame.to_pandas(): presentation sink for margin tables, documented driver-sized"),

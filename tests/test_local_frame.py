@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import flatbread_spark as fb
+import flatbread_spark.frame as frame_mod
 from flatbread_spark import cache
 from flatbread_spark.frame import FlatFrame
 
@@ -17,6 +18,20 @@ from tests.conftest import pos_auto_threshold
 
 def _jobs(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def _result_bytes(spark, job_id: int) -> int:
+    """Bytes the tasks of one job sent back to the driver as results."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store, total = jsc.statusStore(), 0
+    for stage in spark.sparkContext.statusTracker().getJobInfo(job_id).stageIds:
+        tasks = store.taskList(stage, 0, 1 << 20)
+        for i in range(tasks.size()):
+            metrics = tasks.apply(i).taskMetrics()
+            if metrics.isDefined():
+                total += metrics.get().resultSize()
+    return total
 
 
 def _storage(spark) -> set[int]:
@@ -70,6 +85,45 @@ def test_pivot_chain_above_threshold_takes_ranged_path(spark, lineitem):
     assert cache.pinned_tags() == tags + ["frame"]
     assert fb.release_caches("frame") >= 1
     assert "frame" not in cache.pinned_tags()
+
+
+def test_size_check_ships_one_bound_of_rows_over_many_partitions(spark):
+    """The size check is a plain limit: over 64 partitions it sends the
+    driver the same threshold + 1 rows as over one partition (an ordered
+    collect would send threshold + 1 rows from every partition)."""
+    def src(parts):
+        ids = spark.range(0, 6400, 1, parts)
+        return ids.select(
+            F.col("id").cast("string").alias("k"),
+            F.sha2(F.col("id").cast("string"), 512).alias("v"),
+        )
+
+    sent = {}
+    for parts in (1, 64):
+        j0 = _jobs(spark)
+        with pos_auto_threshold(50):
+            ff = FlatFrame.from_df(src(parts), index=["k"])
+        assert ff.pos_ranged
+        sent[parts] = _result_bytes(spark, j0)  # the size check's job
+        fb.release_caches("frame")
+    assert 0 < sent[64] <= 1.5 * sent[1], sent
+
+
+def test_frame_above_the_byte_bound_stays_distributed(spark, monkeypatch):
+    """Within the row threshold but above LOCAL_FRAME_BYTES the frame is
+    pinned and keeps window positions over it, with the same rows."""
+    src = spark.createDataFrame(
+        [(f"k{i}", f"v{i}") for i in range(10)], "k string, v string"
+    )
+    local = FlatFrame.from_df(src, index=["k"])
+    tags = cache.pinned_tags()
+    monkeypatch.setattr(frame_mod, "LOCAL_FRAME_BYTES", 100)  # 2 rows of 40 B
+    ff = FlatFrame.from_df(src, index=["k"])
+    assert not ff.pos_ranged
+    assert cache.pinned_tags() == tags + ["frame"]
+    assert "LocalTableScan" not in ff.df._jdf.queryExecution().executedPlan().toString()
+    assert ff.df.orderBy("__pos__").collect() == local.df.orderBy("__pos__").collect()
+    assert fb.release_caches("frame") >= 1
 
 
 _EDGE_SCHEMA = "k string, x double, d decimal(38,12), z double"

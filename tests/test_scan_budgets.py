@@ -15,6 +15,12 @@ scan-count budget in ``scan_budgets.json``, which ``plan_audit.py
 
 Equality (not <=) is intentional: a decrease is an improvement worth
 locking in, so a stale too-high budget also fails until lowered.
+
+Work a query runs while it BUILDS its DataFrame (a bounded collect whose
+rows re-enter the plan as a local relation) leaves the returned plan, so
+its scans no longer count here. The golden's ``build_jobs`` fact keeps it
+visible, and ``build_job_budgets`` budgets it the same way: a query absent
+from that map has a budget of 0 build jobs.
 """
 import json
 import os
@@ -22,11 +28,11 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _load():
+def _load(key="budgets"):
     with open(os.path.join(REPO, "plans_golden.json")) as f:
         golden = json.load(f)["fingerprints"]
     with open(os.path.join(REPO, "scan_budgets.json")) as f:
-        budgets = json.load(f)["budgets"]
+        budgets = json.load(f)[key]
     return golden, budgets
 
 
@@ -61,4 +67,20 @@ def test_scan_counts_match_budgets_exactly():
     assert not under, (
         "scan count fell below budget — lock the improvement in by "
         f"lowering scan_budgets.json {{name: (budget, got)}}: {under}"
+    )
+
+
+def test_build_jobs_match_budgets_exactly():
+    golden, budgets = _load("build_job_budgets")
+    stale = sorted(set(budgets) - set(golden))
+    assert not stale, f"build-job budgets for queries no longer declared: {stale}"
+    off = {
+        n: (budgets.get(n, 0), golden[n]["build_jobs"])
+        for n in sorted(golden)
+        if golden[n]["build_jobs"] != budgets.get(n, 0)
+    }
+    assert not off, (
+        "build_jobs differ from scan_budgets.json build_job_budgets (an "
+        "increase needs the budget edited, with a justifying commit; a "
+        f"decrease is locked in by lowering it) {{name: (budget, got)}}: {off}"
     )
