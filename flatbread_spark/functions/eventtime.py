@@ -13,8 +13,9 @@ version:
 
 ``ensure_epoch_ns`` folds all three into the BIGINT-ns contract in one
 place so every operator is dtype-polymorphic without per-operator branching.
-NTZ wall-clock values are interpreted as UTC (the helper pins the session
-timezone), matching how DuckDB's naive TIMESTAMP feeds ``epoch_ns``.
+NTZ wall-clock values are interpreted as UTC (their distance from the NTZ
+epoch, independent of the session timezone, which the helper leaves alone),
+matching how DuckDB's naive TIMESTAMP feeds ``epoch_ns``.
 
 Works on batch AND streaming DataFrames (withColumn only), so the streaming
 sources normalize right after ``readStream`` with the same helper.
@@ -34,22 +35,22 @@ def ensure_epoch_ns(df: DataFrame, col: str = "ts") -> DataFrame:
     """Return ``df`` with ``col`` as BIGINT epoch-nanoseconds.
 
     Integral columns pass through unchanged (already epoch-ns by the engine
-    contract). TIMESTAMP / TIMESTAMP_NTZ convert via ``unix_micros`` — exact
-    (no floating point), and NTZ wall-clock is read as UTC so the value
-    agrees with a naive-timestamp SQL oracle.
+    contract). TIMESTAMP converts via ``unix_micros`` and TIMESTAMP_NTZ via
+    its microsecond distance from the NTZ epoch — both exact (no floating
+    point), and NTZ wall-clock is read as UTC so the value agrees with a
+    naive-timestamp SQL oracle under any session timezone.
     """
     dt = df.schema[col].dataType
     if isinstance(dt, _INTEGRAL):
         return df
-    if isinstance(dt, (TimestampType, TimestampNTZType)):
-        if isinstance(dt, TimestampNTZType):
-            # NTZ→TIMESTAMP cast interprets the wall clock in the session
-            # timezone; pin UTC so the epoch value is the literal one.
-            df.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
-        return df.withColumn(
-            col,
-            (F.unix_micros(F.col(col).cast("timestamp")) * F.lit(1000)).cast("long"),
+    if isinstance(dt, TimestampNTZType):
+        micros = F.timestamp_diff(
+            "MICROSECOND", F.expr("TIMESTAMP_NTZ'1970-01-01 00:00:00'"), F.col(col)
         )
-    raise TypeError(
-        f"column {col!r} must be integral epoch-ns or a timestamp, got {dt}"
-    )
+    elif isinstance(dt, TimestampType):
+        micros = F.unix_micros(F.col(col))
+    else:
+        raise TypeError(
+            f"column {col!r} must be integral epoch-ns or a timestamp, got {dt}"
+        )
+    return df.withColumn(col, (micros * F.lit(1000)).cast("long"))

@@ -5,21 +5,10 @@ slice the token stream into fixed ``ctx_len`` windows ("packs"); a document's
 placement is therefore a pure function of the global running token sum in
 front of it. Computing that running sum with one unpartitioned window is a
 single-task serialization point at corpus scale, so :func:`scalable_cumsum`
-uses the classic two-phase plan (the running-sum sibling of
-``ranking.scalable_pos``):
-
-1. ``repartitionByRange(order)`` — partitions hold contiguous key ranges.
-2. local running sum per partition (window PARTITIONED by
-   ``spark_partition_id`` — no single-task stage) + per-partition totals;
-   partition offsets are a prefix sum over ``numPartitions`` rows (bounded
-   driver collect, one long per partition) broadcast back.
-
-The partitioned frame is eagerly ``localCheckpoint``-ed between the totals
-pass and the offset-add pass so both see identical partition contents —
-``persist`` blocks can be evicted and recomputed with a fresh range-boundary
-sample, silently moving rows between partitions while the collected offsets
-still describe the old layout (the same failure mode documented on
-``scalable_pos``); a checkpoint fails loudly instead.
+runs on the two-phase scaffold of ``ranking.two_phase_offset`` (range
+partition, per-partition running sums, a bounded driver collect of one
+total per partition, offsets added back over a checkpointed frame — see
+that module's docstring).
 
 Reference parity: the flatbread reference has no packing operator — this is
 part of the LLM-pipeline family the engine adds on top of the reference
@@ -48,21 +37,20 @@ def scalable_cumsum(
     checkpoint-between-passes discipline."""
     from pyspark.sql import Window
 
-    from flatbread_spark.operators.ranking import two_phase_offset
+    from flatbread_spark.operators.ranking import RunningOutput, two_phase_offset
 
     val = F.col(value) if isinstance(value, str) else value
     staged = df.withColumn("__val__", val.cast("bigint"))
-    out = two_phase_offset(
-        staged,
-        order,
-        local_value=lambda w: F.sum("__val__").over(
+    cum = RunningOutput(
+        out_col,
+        local=lambda w: F.sum("__val__").over(
             w.rowsBetween(Window.unboundedPreceding, 0)
         ),
-        partition_stat=F.sum("__val__"),
-        out_col=out_col,
+        stat=F.sum("__val__"),
+        offset_type="bigint",
         out_type="bigint",
-        num_partitions=num_partitions,
     )
+    out, _ = two_phase_offset(staged, order, [cum], num_partitions=num_partitions)
     return out.drop("__val__")
 
 

@@ -7,7 +7,8 @@ point if a caller ever lifts a high-cardinality frame (VERDICT r1 watch item).
 
 :func:`scalable_pos` is the scale path: the classic two-phase global rank.
 :func:`two_phase_offset` is the shared scaffold (also backing
-``packing.scalable_cumsum`` — the running-SUM sibling):
+:func:`two_phase_decimal_cumsums` and ``packing.scalable_cumsum`` — the
+running-SUM siblings):
 
 1. ``repartitionByRange(order)`` — partitions hold contiguous key ranges.
 2. a local per-partition running value (window PARTITIONED by
@@ -30,35 +31,45 @@ same determinism contract the window path has).
 """
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from typing import Callable, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+class RunningOutput(NamedTuple):
+    """One output column of :func:`two_phase_offset`: its running value
+    ``local(w)`` over the partition window ``w``, the per-partition total
+    ``stat`` that offsets later partitions, the SQL type the offsets enter
+    the plan as, and the output column's type."""
+
+    name: str
+    local: "Callable[..., Column]"
+    stat: Column
+    offset_type: str
+    out_type: str
+
+
 def two_phase_offset(
     df: DataFrame,
     order: Sequence[str | Column],
-    local_value: "Callable[..., Column]",
-    partition_stat: Column,
-    out_col: str,
-    out_type: str,
+    outputs: Sequence[RunningOutput],
     num_partitions: int | None = None,
-    with_total: bool = False,
-) -> "DataFrame | tuple[DataFrame, int]":
-    """Shared two-phase scaffold: range-partition on ``order``, compute
-    ``local_value(window)`` per partition, collect ``partition_stat`` per
-    partition, prefix-sum the stats into offsets, add them back. The
-    checkpoint-between-passes discipline lives HERE, once — see the module
-    docstring for why it must be a checkpoint and not a persist.
+) -> "tuple[DataFrame, list]":
+    """Shared two-phase scaffold: range-partition on ``order``, compute each
+    output's ``local(window)`` per partition, collect every ``stat`` per
+    partition in one pass, prefix-sum the stats into offsets, add them
+    back. The checkpoint-between-passes discipline lives HERE, once — see
+    the module docstring for why it must be a checkpoint and not a persist.
 
-    ``with_total=True`` additionally returns the grand total of
-    ``partition_stat`` (for ``scalable_pos``: the exact row count) as a
-    plain int — it is the last prefix-sum accumulator value, ALREADY on
-    the driver. Callers that need ``n`` (every nearest-rank percentile
-    formula) must take it from here instead of running a separate
-    ``.count()``/``agg`` action: each extra action is a whole Spark job
-    (more under AQE), and per-job fixed overhead is exactly the
+    Offsets accumulate as the values the collect returns (``int``, or an
+    exact ``Decimal`` for decimal sums) and enter the plan cast from their
+    exact text. Returns the frame and each output's grand total (for
+    ``scalable_pos``: the exact row count) — the last accumulator value,
+    ALREADY on the driver. Callers that need ``n`` (every nearest-rank
+    percentile formula) must take it from here instead of running a
+    separate ``.count()``/``agg`` action: each extra action is a whole
+    Spark job (more under AQE), and per-job fixed overhead is exactly the
     contention-amplifier class (SCALE.md round 10) behind the round-10/11
     driver-bench outliers."""
     order = list(order)
@@ -72,49 +83,49 @@ def two_phase_offset(
     from flatbread_spark.session import no_adaptive_execution
 
     w = Window.partitionBy("__pid__").orderBy(*order)
-    local = (
-        part.withColumn("__pid__", F.spark_partition_id())
-        .withColumn("__lv__", local_value(w))
-        # lineage cut: the collected stats below are only valid for THIS
-        # materialization of the range partitioning. LAZY checkpoint: the
-        # stats collect right below computes every partition anyway, so it
-        # doubles as the materializing action — one Spark job instead of
-        # two, same truncation guarantee (a later lost block still fails
-        # loudly; there is no lineage left to silently recompute with a
-        # fresh range-boundary sample)
-        .localCheckpoint(eager=False)
-    )
+    local = part.withColumn("__pid__", F.spark_partition_id())
+    for i, o in enumerate(outputs):
+        local = local.withColumn(f"__lv{i}__", o.local(w))
+    # lineage cut: the collected stats below are only valid for THIS
+    # materialization of the range partitioning. LAZY checkpoint: the
+    # stats collect right below computes every partition anyway, so it
+    # doubles as the materializing action — one Spark job instead of
+    # two, same truncation guarantee (a later lost block still fails
+    # loudly; there is no lineage left to silently recompute with a
+    # fresh range-boundary sample)
+    local = local.localCheckpoint(eager=False)
     # internal action, fixed shape: skip AQE's per-stage job splitting
     # (see session.no_adaptive_execution — this pass is where the
     # round-11 quantile_buckets 27x driver outlier's jobs went)
     with no_adaptive_execution(df.sparkSession):
         stats = sorted(
-            local.groupBy("__pid__").agg(partition_stat.alias("__s")).collect()
+            local.groupBy("__pid__")
+            .agg(*[o.stat.alias(f"__s{i}__") for i, o in enumerate(outputs)])
+            .collect()
         )
-    offsets, acc = {}, 0
-    for pid, s in stats:
-        offsets[pid] = acc
-        acc += int(s or 0)
-    entries: list[Column] = []
-    for pid, off in sorted(offsets.items()):
-        entries.append(F.lit(pid))
-        entries.append(F.lit(off).cast("bigint"))
-    # EMPTY input ⇒ zero partitions reported ⇒ create_map() with no
-    # entries types as map<void,void> and map()[__pid__] fails analysis
-    # (caught by the round-7 event property sweep: conversion_lag with no
-    # converting keys). A typed empty map keeps the plan valid; the frame
-    # has no rows for the lookup to run against anyway.
-    off_map = (
-        F.create_map(*entries)
-        if entries
-        else F.lit(None).cast("map<int,bigint>")
-    )
-    out = local.withColumn(
-        out_col, (F.col("__lv__") + off_map[F.col("__pid__")]).cast(out_type)
-    ).drop("__pid__", "__lv__")
-    if with_total:
-        return out, acc
-    return out
+    totals = []
+    for i, o in enumerate(outputs):
+        entries: list[Column] = []
+        acc = 0
+        for row in stats:
+            entries.append(F.lit(row[0]))
+            entries.append(F.lit(str(acc)).cast(o.offset_type))
+            acc += row[i + 1] or 0
+        totals.append(acc)
+        # EMPTY input ⇒ zero partitions reported ⇒ create_map() with no
+        # entries types as map<void,void> and map()[__pid__] fails analysis
+        # (caught by the round-7 event property sweep: conversion_lag with
+        # no converting keys). A typed empty map keeps the plan valid; the
+        # frame has no rows for the lookup to run against anyway.
+        off_map = (
+            F.create_map(*entries)
+            if entries
+            else F.lit(None).cast(f"map<int,{o.offset_type}>")
+        )
+        local = local.withColumn(
+            o.name, (F.col(f"__lv{i}__") + off_map[F.col("__pid__")]).cast(o.out_type)
+        )
+    return local.drop("__pid__", *[f"__lv{i}__" for i in range(len(outputs))]), totals
 
 
 def scalable_pos(
@@ -128,16 +139,15 @@ def scalable_pos(
     unpartitioned window. Returns ``df`` + ``out_col`` (double);
     ``with_total=True`` also returns the exact row count ``n`` (free — see
     :func:`two_phase_offset`)."""
-    return two_phase_offset(
-        df,
-        order,
-        local_value=lambda w: F.row_number().over(w),
-        partition_stat=F.count(F.lit(1)),
-        out_col=out_col,
+    pos = RunningOutput(
+        out_col,
+        local=lambda w: F.row_number().over(w),
+        stat=F.count(F.lit(1)),
+        offset_type="bigint",
         out_type="double",
-        num_partitions=num_partitions,
-        with_total=with_total,
     )
+    ranked, (n,) = two_phase_offset(df, order, [pos], num_partitions=num_partitions)
+    return (ranked, n) if with_total else ranked
 
 
 def two_phase_decimal_cumsums(
@@ -153,12 +163,9 @@ def two_phase_decimal_cumsums(
     (reference ``percentages.py:390-419`` semantics without the
     unpartitioned window).
 
-    Same two-phase + lazy-localCheckpoint discipline as
-    :func:`two_phase_offset` (see module docstring for why checkpoint, not
-    persist); all N columns share ONE range repartition and ONE stats
-    collect. Per-partition offsets accumulate driver-side in Python
-    ``Decimal`` (exact at any scale — the driver holds one Decimal per
-    partition per column, nothing data-sized) and re-enter the plan as
+    One :func:`two_phase_offset` call: all N columns share ONE range
+    repartition and ONE stats collect. Per-partition offsets accumulate
+    driver-side in Python ``Decimal`` and re-enter the plan as
     ``decimal(27,12)`` literals, so the final add is (27,12)+(27,12) →
     (28,12): inside Spark's 38-digit budget, hence NO allowPrecisionLoss
     rescale (the Hypothesis-found trap documented in
@@ -166,52 +173,24 @@ def two_phase_decimal_cumsums(
     local cumsums to 15 integer digits — percentages are ≤ 100·base per
     row, so this holds to ~1e13 rows at base=100.
     """
-    from decimal import Decimal
-
     from pyspark.sql import Window
 
-    order = list(order)
-    value_cols = list(value_cols)
-    part = (
-        df.repartitionByRange(num_partitions, *order)
-        if num_partitions
-        else df.repartitionByRange(*order)
-    )
-    w = (
-        Window.partitionBy("__pid__")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    from flatbread_spark.session import no_adaptive_execution
+    def running_sum(c):
+        return lambda w: F.sum(F.col(c)).over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        ).cast("decimal(27,12)")
 
-    local = part.withColumn("__pid__", F.spark_partition_id())
-    for c in value_cols:
-        local = local.withColumn(
-            f"{c}__lc__", F.sum(F.col(c)).over(w).cast("decimal(27,12)")
-        )
-    # lazy lineage cut (same reasoning as two_phase_offset): the offsets
-    # collected below are only valid for THIS materialization of the range
-    # partitioning, and the stats pass doubles as the materializing action
-    local = local.localCheckpoint(eager=False)
-    with no_adaptive_execution(df.sparkSession):
-        stats = local.groupBy("__pid__").agg(
-            *[F.sum(F.col(c)).alias(c) for c in value_cols]
-        ).collect()
-    acc = {c: Decimal(0) for c in value_cols}
-    entries: dict[str, list[Column]] = {c: [] for c in value_cols}
-    for row in sorted(stats, key=lambda r: r["__pid__"]):
-        for c in value_cols:
-            entries[c].append(F.lit(row["__pid__"]))
-            entries[c].append(F.lit(str(acc[c])).cast("decimal(27,12)"))
-            acc[c] += row[c] if row[c] is not None else 0
-    out = local
-    for c in value_cols:
-        off = F.create_map(*entries[c])[F.col("__pid__")]
-        out = out.withColumn(
+    outputs = [
+        RunningOutput(
             f"{c}{out_suffix}",
-            (F.col(f"{c}__lc__") + off).cast("decimal(28,12)"),
-        ).drop(f"{c}__lc__")
-    return out.drop("__pid__")
+            local=running_sum(c),
+            stat=F.sum(F.col(c)),
+            offset_type="decimal(27,12)",
+            out_type="decimal(28,12)",
+        )
+        for c in value_cols
+    ]
+    return two_phase_offset(df, order, outputs, num_partitions=num_partitions)[0]
 
 
 def exact_percentiles(

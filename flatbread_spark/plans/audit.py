@@ -14,6 +14,8 @@ Facts (read off ``executedPlan`` after AQE initial planning):
   ``map_pandas``)
 - ``cartesian`` / ``bnlj`` — red flags unless the build side is a 1-row
   scalar frame
+- ``expensive_filters`` physical ``Filter`` nodes whose condition holds an
+  expensive computed expression (see ``EXPENSIVE`` below)
 """
 from __future__ import annotations
 
@@ -57,16 +59,52 @@ STREAM_MARKS = [
 ]
 
 
-def streaming_plan_facts(plan_text: str) -> dict[str, int]:
+# A Filter condition holding one of these re-evaluates a computed
+# expression (HOF, tokenizer split, hash chain, sequence build) that
+# Catalyst inlined by pushing the predicate below its Project; with HOFs
+# in the plan there is no subexpression elimination, so the work is done
+# twice (SCALE.md "Filter pushback").
+EXPENSIVE = re.compile(
+    r"lambdafunction|aggregate\(|transform\(|zip_with|"
+    r"regexp_|sentences\(|split\(|md5\(|xxhash64\(|array_sort|sequence\("
+)
+
+
+def plan_text(df: DataFrame) -> str:
+    """``df``'s executed physical plan as text (does not run the query)."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def expensive_filter_conditions(plan: str) -> list[str]:
+    """The condition (first 200 chars) of every ``Filter`` node in ``plan``
+    matching ``EXPENSIVE`` — a scan's ``PushedFilters:`` field is no node."""
+    conds = []
+    for line in plan.splitlines():
+        s = line.strip()
+        if "Filter" in s and s.split("Filter", 1)[0].strip(" +-*()0123456789") == "":
+            cond = s.split("Filter", 1)[1]
+            if EXPENSIVE.search(cond):
+                conds.append(cond[:200])
+    return conds
+
+
+def _count(marks: list[tuple[str, str]], plan: str) -> dict[str, int]:
+    return {k: len(re.findall(p, plan)) for k, p in marks}
+
+
+def streaming_plan_facts(plan: str) -> dict[str, int]:
     """Fact counts for a streaming micro-batch plan string (as returned by
     ``streaming.replay.last_plan``)."""
-    return {k: len(re.findall(p, plan_text)) for k, p in STREAM_MARKS}
+    return _count(STREAM_MARKS, plan)
 
 
 def plan_facts(df: DataFrame) -> dict[str, int]:
     """Fact counts for ``df``'s executed plan (does not run the query)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return {k: len(re.findall(p, plan)) for k, p in MARKS}
+    plan = plan_text(df)
+    return {
+        **_count(MARKS, plan),
+        "expensive_filters": len(expensive_filter_conditions(plan)),
+    }
 
 
 def plan_flags(facts: dict[str, int]) -> list[str]:

@@ -27,6 +27,17 @@ facts; ``build_jobs`` keeps it visible. Every parquet table of the golden
 ``sf_dir`` has its schema inferred before the first query, so no query is
 charged for a first read.
 
+The facts are read before AQE runs a stage, so run-time exchange reuse is
+invisible (``simhash_pairs`` counts both sides of a self-join that,
+executed, share one exchange).
+
+This is the registry's one planning pass: ``tests/test_plan_golden.py``
+pins live plans == committed golden, and every other registry-wide plan
+invariant reads the committed file — scan and build-job budgets
+(``test_scan_budgets``), the shuffled-hash-join envelope
+(``test_shj_envelope_r12``), no ``cartesian`` (``test_new_op_plans``) and
+allowlisted ``expensive_filters`` (``test_filter_audit``).
+
 Regenerate DELIBERATELY after a plan-shape change you intend:
 
     python scripts/plan_audit.py --write-golden
@@ -35,6 +46,7 @@ and review the diff in the commit — the review is the point.
 """
 from __future__ import annotations
 
+import json
 import os
 
 from flatbread_spark.plans.audit import plan_facts
@@ -49,14 +61,21 @@ GOLDEN_PATH = os.path.join(
     "plans_golden.json",
 )
 
-# Stream-replay harnesses: building the result DataFrame executes the
-# micro-batch drain and returns an in-memory batch frame — nothing of the
-# streaming plan survives in the RETURNED frame, so the batch collector
-# excludes them. Their micro-batch physical plans are fingerprinted
-# separately (VERDICT r7 #6) by collect_streaming_fingerprints below:
-# the drain helper stashes each StreamingQuery handle, and the last
-# executed batch's plan (explainInternal) is counted against the
-# state-layout node set in plans/audit.STREAM_MARKS.
+
+def load_golden() -> dict:
+    """The committed ``plans_golden.json`` payload (``env``,
+    ``fingerprints``, ``streaming``), checked to be generated under
+    ``GOLDEN_ENV``."""
+    with open(GOLDEN_PATH) as f:
+        payload = json.load(f)
+    if payload["env"] != GOLDEN_ENV:
+        raise ValueError(
+            "plans_golden.json was generated under a different environment; "
+            "regenerate with scripts/plan_audit.py --write-golden"
+        )
+    return payload
+
+
 # Tags under which __spark_entry__ pins frames (cache.pin(..., tag=...)).
 # collect_fingerprints releases exactly these between queries — the entry
 # module's memoized persisted frames are the only ones whose ALREADY-
@@ -64,18 +83,14 @@ GOLDEN_PATH = os.path.join(
 # nodes into later fingerprints.
 ENTRY_PIN_TAGS = ("knn_recall", "ivf_sweep")
 
-SKIP = {
-    "stream_replay",
-    "stream_dedup_replay",
-    "stream_quality_gate",
-    "stream_topk",
-    "stream_upsert",
-    "stream_drift",
-    "stream_rate_anomaly",
-}
-
-# streaming query name -> its memory-sink queryName (the key the drain
-# helper registers the StreamingQuery handle under)
+# Stream-replay harnesses, query name -> its memory-sink queryName (the
+# key the drain helper registers the StreamingQuery handle under).
+# Building the result DataFrame executes the micro-batch drain and returns
+# an in-memory batch frame — nothing of the streaming plan survives in the
+# RETURNED frame, so the batch collector skips them. Their micro-batch
+# physical plans are fingerprinted separately (VERDICT r7 #6) by
+# collect_streaming_fingerprints below: the last executed batch's plan
+# (explainInternal) is counted against plans/audit.STREAM_MARKS.
 STREAM_SINKS = {
     "stream_replay": "fb_stream_replay",
     "stream_dedup_replay": "fb_stream_dedup",
@@ -141,7 +156,7 @@ def collect_fingerprints(spark, verbose: bool = False) -> dict[str, dict[str, in
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     out: dict[str, dict[str, int]] = {}
     for name, fn in _entry.queries().items():
-        if name in SKIP:
+        if name in STREAM_SINKS:
             continue
         # Scoped cache-state reset, not just clearCache(): the entry module
         # memoizes the shared bruteforce baseline (_BF_CACHE) as an

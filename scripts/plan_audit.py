@@ -15,6 +15,9 @@ bench read). Generation MUST match the test-session config, so the golden
 is always produced under ``flatbread_spark.plans.golden.GOLDEN_ENV``
 (local[4], 4 shuffle partitions, sf0.001) regardless of CLI args.
 
+A query whose plan has ``expensive_filters`` also prints its flagged Filter
+conditions (``tests/test_filter_audit.py`` pins which queries may have any).
+
 ``--write-golden`` deliberately does NOT regenerate ``scan_budgets.json``
 (the per-query scan-count ratchet, VERDICT r9 #3): a regenerated golden
 with more scans still fails ``tests/test_scan_budgets.py`` until the
@@ -29,7 +32,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
-from flatbread_spark.plans import plan_facts, plan_flags  # noqa: E402
+from flatbread_spark.plans.audit import (  # noqa: E402
+    expensive_filter_conditions,
+    plan_facts,
+    plan_flags,
+    plan_text,
+)
 from flatbread_spark.plans.golden import (  # noqa: E402
     GOLDEN_ENV,
     GOLDEN_PATH,
@@ -75,13 +83,16 @@ def main() -> None:
         if only and name not in only:
             continue
         try:
-            facts = plan_facts(fn(spark, sf_dir))
+            df = fn(spark, sf_dir)
+            facts = plan_facts(df)
         except Exception as e:  # noqa: BLE001
             print(f"{name}: ERROR {e}")
             continue
         flags = plan_flags(facts)
         line = " ".join(f"{k}={v}" for k, v in facts.items() if v)
         print(f"{name}: {line}{('  !! ' + ','.join(flags)) if flags else ''}")
+        for cond in expensive_filter_conditions(plan_text(df))[:2]:
+            print(f"    Filter{cond}")
 
 
 if __name__ == "__main__":

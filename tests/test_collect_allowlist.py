@@ -39,7 +39,7 @@ COLLECT_ALLOWLIST = {
     "operators/pca.py": (3, "d*d covariance moment aggregate (collected once; doubles as the pin materialization) + d*d covariance table in pca_train + d-row component table: all dimension-bounded"),
     "operators/graph.py": (2, "union-find edge probe hard-capped at driver_max_edges+1 (fails loudly past the cap) + 1-row count"),
     "operators/lm.py": (1, "trigram LM model table: vocabulary-bounded (min_count-filtered)"),
-    "operators/ranking.py": (3, "per-partition boundary stats (partitions rows) + range-bound rows + 1-row total"),
+    "operators/ranking.py": (2, "two-phase scaffold per-partition stats (partitions rows, shared by positions and decimal cumsums) + 1-row total"),
     "operators/curation.py": (2, "per-gate funnel summary (gate-count rows) + vocab_overlap per-group vocabulary sizes (#groups rows — the old plan already broadcast them to the driver)"),
     "operators/vocabulary.py": (1, "characteristic_terms per-group token totals: #groups rows — the old plan already broadcast them to the driver"),
     "sources/pivot.py": (1, "pivot-value discovery: capped at spark.sql.pivotMaxValues + 1 rows, past which it raises (the collect Spark's own groupBy().pivot() ran internally)"),

@@ -4,9 +4,7 @@ must be visible in the physical plan, so a regression that silently
 re-introduces a shuffle or a sort-merge join fails here."""
 from pyspark.sql import functions as F
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from flatbread_spark.plans.audit import plan_text as _plan
 
 
 def test_trigram_score_pass_is_map_side(spark, documents):
@@ -62,24 +60,22 @@ def test_curation_funnel_is_single_scan(spark, documents):
     assert _plan(report).count("Scan parquet") == 0
 
 
-def test_no_query_plans_a_cartesian_product(spark):
+def test_no_query_plans_a_cartesian_product():
     """Repo-wide invariant: no declared query's physical plan contains a
     CartesianProduct. BroadcastNestedLoopJoin is allowed — every occurrence
     in this repo has a scalar/presentation-sized build side (margin
     denominators, k query vectors, a 4-row sweep grid) — but an
     un-broadcast cross product is always a bug at corpus scale.
-    Streaming queries are skipped (plan building would execute them)."""
-    import __spark_entry__ as e
+    Checked over the committed plan golden, which
+    tests/test_plan_golden.py pins to the live plans; the streaming
+    harnesses it skips return drained in-memory frames."""
+    from flatbread_spark.plans.golden import load_golden
 
-    skip = {"stream_replay", "stream_dedup_replay", "stream_quality_gate"}
-    offenders = {}
-    for name, fn in e.queries().items():
-        if name in skip:
-            continue
-        plan = _plan(fn(spark, "/root/testdata/sf0.001"))
-        n = plan.count("CartesianProduct")
-        if n:
-            offenders[name] = n
+    offenders = {
+        name: facts["cartesian"]
+        for name, facts in load_golden()["fingerprints"].items()
+        if facts["cartesian"]
+    }
     assert not offenders, offenders
 
 

@@ -1002,6 +1002,17 @@ def test_apportioned_ranged_null_propagation(spark):
         assert rows_r[k][0] is None
 
 
+def test_two_phase_decimal_cumsums_empty_input(spark):
+    """An empty frame yields no rows and typed cumsum columns (an untyped
+    empty offset map()[__pid__] fails analysis)."""
+    from flatbread_spark.operators.ranking import scalable_pos, two_phase_decimal_cumsums
+
+    df = spark.createDataFrame([], "__pos__ double, v decimal(28,12)")
+    out = two_phase_decimal_cumsums(df, ["__pos__"], ["v"])
+    assert dict(out.dtypes)["v__cum__"] == "decimal(28,12)"
+    assert out.collect() == [] and scalable_pos(df, ["__pos__"]).collect() == []
+
+
 def test_compression_check_contract(spark):
     """The zlib contract kernel: all three invariants hold for real text,
     empty/None are vacuous-true, and the bound is the documented zlib

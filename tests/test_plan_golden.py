@@ -8,58 +8,44 @@ INTENDED, regenerate deliberately and review the diff in the commit:
 
     python scripts/plan_audit.py --write-golden
 """
-import json
-
-import pytest
-
 from flatbread_spark.plans.golden import (
     GOLDEN_ENV,
-    GOLDEN_PATH,
-    SKIP,
     STREAM_SINKS,
     collect_fingerprints,
     collect_streaming_fingerprints,
+    load_golden,
 )
 
 
-@pytest.fixture(scope="module")
-def payload():
-    with open(GOLDEN_PATH) as f:
-        payload = json.load(f)
-    assert payload["env"] == GOLDEN_ENV, (
-        "plans_golden.json was generated under a different environment; "
-        "regenerate with scripts/plan_audit.py --write-golden"
-    )
-    return payload
+def _drift(golden, got, names):
+    """``name: {fact: (golden, current)}`` lines for every query in
+    ``names`` whose facts differ."""
+    return [
+        f"{n}: " + str({
+            k: (golden[n].get(k), got[n].get(k))
+            for k in set(golden[n]) | set(got[n])
+            if golden[n].get(k) != got[n].get(k)
+        })
+        for n in sorted(names)
+        if got[n] != golden[n]
+    ]
 
 
-@pytest.fixture(scope="module")
-def golden(payload):
-    return payload["fingerprints"]
-
-
-def test_plan_fingerprints_match_golden(spark, golden):
+def test_plan_fingerprints_match_golden(spark):
     # conftest's session IS the golden environment (local[4], 4 shuffle
     # partitions) — assert that before trusting any comparison.
     assert spark.conf.get("spark.sql.shuffle.partitions") == str(
         GOLDEN_ENV["shuffle_partitions"]
     )
+    golden = load_golden()["fingerprints"]
     got = collect_fingerprints(spark)
 
     import __spark_entry__ as e
 
-    declared = {n for n in e.queries() if n not in SKIP}
+    declared = {n for n in e.queries() if n not in STREAM_SINKS}
     missing = declared - set(golden)
     stale = set(golden) - declared
-    diffs = []
-    for name in sorted(declared & set(golden)):
-        if got[name] != golden[name]:
-            changed = {
-                k: (golden[name].get(k), got[name].get(k))
-                for k in set(golden[name]) | set(got[name])
-                if golden[name].get(k) != got[name].get(k)
-            }
-            diffs.append(f"{name}: {changed}")
+    diffs = _drift(golden, got, declared & set(golden))
     msg = []
     if missing:
         msg.append(f"queries missing from golden (regenerate): {sorted(missing)}")
@@ -70,27 +56,18 @@ def test_plan_fingerprints_match_golden(spark, golden):
     assert not msg, "\n".join(msg)
 
 
-def test_streaming_plan_fingerprints_match_golden(spark, payload):
+def test_streaming_plan_fingerprints_match_golden(spark):
     """VERDICT r7 #6: the 7 streaming queries' micro-batch physical plans
     (state-store save/restore pairs, watermark nodes, pandas-with-state
     kernels) must match the committed golden — a state-layout regression
     fails here mechanically like the batch plans do."""
-    golden = payload.get("streaming")
+    golden = load_golden().get("streaming")
     assert golden, (
         "plans_golden.json has no streaming section; regenerate with "
         "scripts/plan_audit.py --write-golden"
     )
     assert set(golden) == set(STREAM_SINKS)
-    got = collect_streaming_fingerprints(spark)
-    diffs = []
-    for name in sorted(STREAM_SINKS):
-        if got[name] != golden[name]:
-            changed = {
-                k: (golden[name].get(k), got[name].get(k))
-                for k in set(golden[name]) | set(got[name])
-                if golden[name].get(k) != got[name].get(k)
-            }
-            diffs.append(f"{name}: {changed}")
+    diffs = _drift(golden, collect_streaming_fingerprints(spark), STREAM_SINKS)
     assert not diffs, (
         "streaming plan-shape drift (golden, current):\n  " + "\n  ".join(diffs)
     )

@@ -25,12 +25,13 @@ from that map has a budget of 0 build jobs.
 import json
 import os
 
+from flatbread_spark.plans.golden import load_golden
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _load(key="budgets"):
-    with open(os.path.join(REPO, "plans_golden.json")) as f:
-        golden = json.load(f)["fingerprints"]
+    golden = load_golden()["fingerprints"]
     with open(os.path.join(REPO, "scan_budgets.json")) as f:
         budgets = json.load(f)[key]
     return golden, budgets

@@ -16,10 +16,7 @@ envelope mechanically:
 2. the ``get_spark(prefer_sort_merge_join=True)`` escape hatch wires the
    Spark-default preference for stat-unreliable deployments.
 """
-import json
-import os
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from flatbread_spark.plans.golden import load_golden
 
 # query -> why the SHJ build side is bounded (NOT corpus-sized)
 SHJ_ADJUDICATED = {
@@ -39,8 +36,7 @@ SHJ_ADJUDICATED = {
 
 
 def test_shj_sites_are_exactly_the_adjudicated_set():
-    with open(os.path.join(REPO, "plans_golden.json")) as f:
-        fp = json.load(f)["fingerprints"]
+    fp = load_golden()["fingerprints"]
     got = {name for name, facts in fp.items() if facts.get("shj", 0) > 0}
     new = got - set(SHJ_ADJUDICATED)
     assert not new, (

@@ -42,6 +42,28 @@ def test_event_ops_dtype_polymorphic(spark, events):
     assert s_native == s_ns and s_native
 
 
+def test_ensure_epoch_ns_leaves_the_session_timezone_alone(spark, events):
+    """TIMESTAMP_NTZ wall clock converts as UTC under any session zone, and
+    the conversion writes no session state."""
+    from datetime import datetime, timedelta
+
+    from flatbread_spark.functions.eventtime import ensure_epoch_ns
+
+    def epoch_ns():
+        return [r.ts for r in ensure_epoch_ns(events, "ts").orderBy("event_id").collect()]
+
+    assert dict(events.dtypes)["ts"] == "timestamp_ntz"
+    utc, zone = epoch_ns(), spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        assert epoch_ns() == utc
+        assert spark.conf.get("spark.sql.session.timeZone") == "America/Los_Angeles"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    wall = events.orderBy("event_id").first().ts
+    assert utc[0] == (wall - datetime(1970, 1, 1)) // timedelta(microseconds=1) * 1000
+
+
 def test_stream_rollup_matches_batch(spark, events, tmp_path):
     batch = {
         (r.bucket_start, r.event_type): (r.n_events, r.sum_value)
