@@ -13,8 +13,12 @@ both sides.
 """
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +40,38 @@ def _bounded_state_parts(spark):
     state spaces. See streaming/replay.bounded_state_partitions for the
     measurements and why real deployments size their own conf."""
     return _bounded_state_partitions(spark, cap=8)
+
+
+@contextmanager
+def _stream_source(sf_dir: str, table: str, prefix: str):
+    """A temp directory holding a symlink to ``sf_dir``'s ``table`` file,
+    removed on exit: the parquet streaming source lists a DIRECTORY and
+    the testdata is a single file. Wrap only the start and drain of the
+    query — the memory sink a harness returns never reads the directory."""
+    stream_dir = tempfile.mkdtemp(prefix=prefix)
+    try:
+        os.symlink(
+            os.path.join(sf_dir, f"{table}.parquet"),
+            os.path.join(stream_dir, f"{table}.parquet"),
+        )
+        yield stream_dir
+    finally:
+        shutil.rmtree(stream_dir, ignore_errors=True)
+
+
+_OUT_DIRS: dict[tuple[str, str], str] = {}
+
+
+def _out_dir(prefix: str, sf_dir: str) -> str:
+    """One temp directory per (prefix, sf_dir) for the life of the process,
+    removed at exit: the frame a round-trip query returns reads the files
+    it wrote lazily, so they outlive the call, and each call overwrites
+    the last one's instead of leaving its own copy."""
+    key = (prefix, sf_dir)
+    if key not in _OUT_DIRS:
+        _OUT_DIRS[key] = tempfile.mkdtemp(prefix=prefix)
+        atexit.register(shutil.rmtree, _OUT_DIRS[key], True)
+    return _OUT_DIRS[key]
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1185,25 +1221,22 @@ def q_stream_dedup_replay(spark, sf_dir):
     exactly one per distinct content fingerprint — a SET, so the oracle is
     DISTINCT md5(text). Second driver-checkable streaming artifact next to
     stream_replay (stateful sessionize)."""
-    import tempfile
-
     from flatbread_spark.streaming.dedup import stream_dedup_exact
 
     docs = _load(spark, sf_dir, "documents")
-    stream_dir = tempfile.mkdtemp(prefix="fb_stream_dedup_")
-    link = os.path.join(stream_dir, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "documents.parquet"), link)
     for q in spark.streams.active:
         if q.name == "fb_stream_dedup":
             q.stop()
-    sdf = (
-        spark.readStream.schema(docs.schema)
-        .parquet(stream_dir)
-        .withColumn("ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id")))
-    )
-    deduped = stream_dedup_exact(sdf, "text", "ts", delay="10 minutes")
-    with _bounded_state_parts(spark):
+    with _stream_source(sf_dir, "documents", "fb_stream_dedup_") as stream_dir, \
+            _bounded_state_parts(spark):
+        sdf = (
+            spark.readStream.schema(docs.schema)
+            .parquet(stream_dir)
+            .withColumn(
+                "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
+            )
+        )
+        deduped = stream_dedup_exact(sdf, "text", "ts", delay="10 minutes")
         q = (
             deduped.writeStream.format("memory")
             .queryName("fb_stream_dedup")
@@ -1280,38 +1313,33 @@ def q_stream_quality_gate(spark, sf_dir):
     no watermark needed, the filter composes into any ingest topology) and
     drained through a memory sink. Proves the text-analysis expression
     family is streaming-safe, not just batch-tested."""
-    import tempfile
-
     from flatbread_spark.functions.text import quality_score, token_count
 
     docs = _load(spark, sf_dir, "documents")
-    stream_dir = tempfile.mkdtemp(prefix="fb_stream_gate_")
-    link = os.path.join(stream_dir, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "documents.parquet"), link)
     for q in spark.streams.active:
         if q.name == "fb_stream_gate":
             q.stop()
-    sdf = spark.readStream.schema(docs.schema).parquet(stream_dir)
-    gated = (
-        sdf.withColumn("quality", quality_score(F.col("text")))
-        .withColumn("tok", token_count(F.col("text")))
-        .filter(
-            F.col("lang").isin("en", "de", "fr")
-            & (F.col("tok") >= 20)
-            & (F.col("quality") >= 0.5)
+    with _stream_source(sf_dir, "documents", "fb_stream_gate_") as stream_dir:
+        sdf = spark.readStream.schema(docs.schema).parquet(stream_dir)
+        gated = (
+            sdf.withColumn("quality", quality_score(F.col("text")))
+            .withColumn("tok", token_count(F.col("text")))
+            .filter(
+                F.col("lang").isin("en", "de", "fr")
+                & (F.col("tok") >= 20)
+                & (F.col("quality") >= 0.5)
+            )
+            .select("doc_id", "lang",
+                    F.col("tok").cast("bigint").alias("n_tokens"), "quality")
         )
-        .select("doc_id", "lang", F.col("tok").cast("bigint").alias("n_tokens"),
-                "quality")
-    )
-    q = (
-        gated.writeStream.format("memory")
-        .queryName("fb_stream_gate")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _stream_drain(q)
+        q = (
+            gated.writeStream.format("memory")
+            .queryName("fb_stream_gate")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        _stream_drain(q)
     return spark.table("fb_stream_gate")
 
 
@@ -2109,25 +2137,17 @@ def q_stream_replay(spark, sf_dir):
     — no reliance on sink insertion order or batch count. Oracle: identical
     gap-rule sessionization in ANSI SQL (same as the batch `sessions` query —
     the stream drains to exactly the batch answer, which is the point)."""
-    import tempfile
-
     from flatbread_spark.streaming.stateful import stream_sessionize
 
     _load(spark, sf_dir, "events")  # sets session confs (tz, nanosAsLong)
     # the streaming source needs the RAW FILE schema (ts as written —
     # stream_sessionize normalizes to epoch-ns after readStream itself)
     raw_schema = load_table(spark, sf_dir, "events").schema
-    # the parquet streaming source lists a DIRECTORY; testdata is a single
-    # file, so expose it through a symlinked temp dir
-    stream_dir = tempfile.mkdtemp(prefix="fb_stream_replay_")
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-
     for q in spark.streams.active:
         if q.name == "fb_stream_replay":
             q.stop()
-    with _bounded_state_parts(spark):
+    with _stream_source(sf_dir, "events", "fb_stream_replay_") as stream_dir, \
+            _bounded_state_parts(spark):
         sdf = stream_sessionize(spark, stream_dir, raw_schema, gap_minutes=30)
         q = (
             sdf.writeStream.format("memory")
@@ -2724,24 +2744,19 @@ def q_stream_topk(spark, sf_dir):
     top-30 — grading the streaming candidate recall end-to-end, same
     contract as token_topk_sketch but with O(buckets × width) incremental
     state instead of a batch pass."""
-    import tempfile
-
     from flatbread_spark.operators.sketches import rescore_topk
     from flatbread_spark.streaming.topk import (
         drain_final_summary, stream_heavy_hitters,
     )
 
     docs = _load(spark, sf_dir, "documents")
-    stream_dir = tempfile.mkdtemp(prefix="fb_stream_topk_")
-    link = os.path.join(stream_dir, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "documents.parquet"), link)
     for q in spark.streams.active:
         if q.name == "fb_stream_topk":
             q.stop()
-    sdf = spark.readStream.schema(docs.schema).parquet(stream_dir)
-    hh = stream_heavy_hitters(sdf, "text", width=1024, n_buckets=8)
-    with _bounded_state_parts(spark):
+    with _stream_source(sf_dir, "documents", "fb_stream_topk_") as stream_dir, \
+            _bounded_state_parts(spark):
+        sdf = spark.readStream.schema(docs.schema).parquet(stream_dir)
+        hh = stream_heavy_hitters(sdf, "text", width=1024, n_buckets=8)
         q = (
             hh.writeStream.format("memory")
             .queryName("fb_stream_topk")
@@ -3094,8 +3109,6 @@ def q_stream_upsert(spark, sf_dir):
     oracle computes. State is O(users); the winner fold is a commutative
     max over (version, tiebreak) pairs, so the answer is independent of
     micro-batch chopping."""
-    import tempfile
-
     from flatbread_spark.functions.eventtime import ensure_epoch_ns
     from flatbread_spark.streaming.upsert import (
         drain_current_state,
@@ -3104,18 +3117,14 @@ def q_stream_upsert(spark, sf_dir):
 
     _load(spark, sf_dir, "events")  # sets session confs (tz, nanosAsLong)
     raw_schema = load_table(spark, sf_dir, "events").schema
-    stream_dir = tempfile.mkdtemp(prefix="fb_stream_upsert_")
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-
     for q in spark.streams.active:
         if q.name == "fb_stream_upsert":
             q.stop()
-    raw = spark.readStream.schema(raw_schema).parquet(stream_dir)
-    changes = ensure_epoch_ns(raw, "ts")
-    out = stream_latest_state(changes, "user_id", "ts", "event_id", "value")
-    with _bounded_state_parts(spark):
+    with _stream_source(sf_dir, "events", "fb_stream_upsert_") as stream_dir, \
+            _bounded_state_parts(spark):
+        raw = spark.readStream.schema(raw_schema).parquet(stream_dir)
+        changes = ensure_epoch_ns(raw, "ts")
+        out = stream_latest_state(changes, "user_id", "ts", "event_id", "value")
         q = (
             out.writeStream.format("memory")
             .queryName("fb_stream_upsert")
@@ -3384,28 +3393,22 @@ def q_stream_rate_anomaly(spark, sf_dir):
     zeros synthesized at close time — and drain. The drained replay must
     equal the batch rate_anomaly restricted to closed, fully-historied
     buckets (the oracle applies exactly that filter)."""
-    import tempfile
-
     from flatbread_spark.functions.eventtime import ensure_epoch_ns
     from flatbread_spark.streaming.rate import stream_rate_anomaly
 
     DAY_NS = 86_400_000_000_000
     _load(spark, sf_dir, "events")  # sets session confs (tz, nanosAsLong)
     raw_schema = load_table(spark, sf_dir, "events").schema
-    stream_dir = tempfile.mkdtemp(prefix="fb_stream_rate_")
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-
     for q in spark.streams.active:
         if q.name == "fb_stream_rate":
             q.stop()
-    raw = spark.readStream.schema(raw_schema).parquet(stream_dir)
-    out = stream_rate_anomaly(
-        ensure_epoch_ns(raw, "ts"), "user_id", "ts", DAY_NS,
-        trailing=3, factor_x1000=3000, min_count=4,
-    )
-    with _bounded_state_parts(spark):
+    with _stream_source(sf_dir, "events", "fb_stream_rate_") as stream_dir, \
+            _bounded_state_parts(spark):
+        raw = spark.readStream.schema(raw_schema).parquet(stream_dir)
+        out = stream_rate_anomaly(
+            ensure_epoch_ns(raw, "ts"), "user_id", "ts", DAY_NS,
+            trailing=3, factor_x1000=3000, min_count=4,
+        )
         q = (
             out.writeStream.format("memory")
             .queryName("fb_stream_rate")
@@ -4026,8 +4029,6 @@ def q_stream_drift(spark, sf_dir):
     exact integer TVD — per-window composition alarm. Counts are exact,
     so the drained stream equals the batch answer and the oracle replays
     the whole pipeline in SQL."""
-    import tempfile
-
     from flatbread_spark.streaming.drift import (
         drift_from_counts,
         stream_mix_counts,
@@ -4039,19 +4040,16 @@ def q_stream_drift(spark, sf_dir):
     # derives from the drained counts (see below), so no batch scan runs
     _load(spark, sf_dir, "events")
     raw_schema = load_table(spark, sf_dir, "events").schema
-    stream_dir = tempfile.mkdtemp(prefix="fb_stream_drift_")
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
     for q in spark.streams.active:
         if q.name == "fb_stream_drift":
             q.stop()
-    counts = stream_mix_counts(spark, stream_dir, raw_schema)
     # ingested = Σ numInputRows over EVERY progress event of q, counted by a
     # listener: q.recentProgress keeps only the last few updates
     # (spark.sql.streaming.numRecentProgressUpdates), so a longer drain
     # would read as a shortfall
-    with _bounded_state_parts(spark), input_row_counter(spark) as counter:
+    with _stream_source(sf_dir, "events", "fb_stream_drift_") as stream_dir, \
+            _bounded_state_parts(spark), input_row_counter(spark) as counter:
+        counts = stream_mix_counts(spark, stream_dir, raw_schema)
         q = (
             counts.writeStream.format("memory")
             .queryName("fb_stream_drift")
@@ -4099,8 +4097,6 @@ def _roundtrip(spark, sf_dir, fmt, **options):
     the rows — the driver-graded §2.2 source-format evidence (the oracle is
     the same projection straight from parquet, so any write/read corruption
     hash-fails)."""
-    import tempfile
-
     from flatbread_spark.sources.tables import read_table, write_table
 
     docs = _load(spark, sf_dir, "documents")
@@ -4109,9 +4105,7 @@ def _roundtrip(spark, sf_dir, fmt, **options):
         F.col("n_chars").cast("bigint").alias("n_chars"),
         F.md5("text").alias("text_md5"),
     )
-    out_dir = os.path.join(
-        tempfile.mkdtemp(prefix=f"fb_rt_{fmt}_"), f"docs_{fmt}"
-    )
+    out_dir = os.path.join(_out_dir(f"fb_rt_{fmt}_", sf_dir), f"docs_{fmt}")
     write_table(staged, out_dir, fmt=fmt, mode="overwrite", **options)
     return read_table(
         spark, out_dir, fmt=fmt, schema=staged.schema, **options
@@ -4142,8 +4136,6 @@ def q_partitioned_pruning(spark, sf_dir):
     tests/test_bucketing.py; this grades the written DATA end to end).
     Partition columns come back as the partition value — any
     path-encoding corruption hash-fails."""
-    import tempfile
-
     from flatbread_spark.sources.tables import read_table, write_table
 
     docs = _load(spark, sf_dir, "documents")
@@ -4152,9 +4144,7 @@ def q_partitioned_pruning(spark, sf_dir):
         F.col("n_chars").cast("bigint").alias("n_chars"),
         F.md5("text").alias("text_md5"),
     )
-    out_dir = os.path.join(
-        tempfile.mkdtemp(prefix="fb_rt_part_"), "docs_part"
-    )
+    out_dir = os.path.join(_out_dir("fb_rt_part_", sf_dir), "docs_part")
     write_table(staged, out_dir, fmt="parquet", mode="overwrite",
                 partition_by="lang")
     back = read_table(spark, out_dir, fmt="parquet")

@@ -34,9 +34,15 @@ plus the entry module's ``knn_recall``/``ivf_sweep`` memoized baselines.
 """
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 _PINNED: list[tuple[str, DataFrame]] = []
+# guards every read-modify-write of _PINNED; unpersist runs after the lock
+# is released, so a frame pinned meanwhile (another thread, or a callback
+# inside unpersist) lands in the registry instead of being overwritten
+_LOCK = threading.Lock()
 
 
 def pin(df: DataFrame, tag: str = "") -> DataFrame:
@@ -46,7 +52,8 @@ def pin(df: DataFrame, tag: str = "") -> DataFrame:
     if lvl.useMemory or lvl.useDisk:
         return df
     df = df.persist()
-    _PINNED.append((tag, df))
+    with _LOCK:
+        _PINNED.append((tag, df))
     return df
 
 
@@ -54,27 +61,28 @@ def register(df: DataFrame, tag: str = "") -> DataFrame:
     """Record an ALREADY-persisted frame for later :func:`release` (for
     operators that manage persistence inline but whose final cached frame
     outlives the call)."""
-    _PINNED.append((tag, df))
+    with _LOCK:
+        _PINNED.append((tag, df))
     return df
+
+
+def _unpersist(frames: list[DataFrame]) -> None:
+    for df in frames:
+        try:
+            df.unpersist()
+        except Exception:
+            pass
 
 
 def release(tag: str | None = None) -> int:
     """Unpersist every pinned frame (optionally only those matching ``tag``).
     Returns the number of frames released. Safe to call with a stopped
     SparkSession (errors are swallowed — nothing to reclaim then anyway)."""
-    kept: list[tuple[str, DataFrame]] = []
-    released = 0
-    for t, df in _PINNED:
-        if tag is None or t == tag:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-            released += 1
-        else:
-            kept.append((t, df))
-    _PINNED[:] = kept
-    return released
+    with _LOCK:
+        dropped = [df for t, df in _PINNED if tag in (None, t)]
+        _PINNED[:] = [(t, df) for t, df in _PINNED if tag not in (None, t)]
+    _unpersist(dropped)
+    return len(dropped)
 
 
 def unpin(df: DataFrame) -> bool:
@@ -87,20 +95,19 @@ def unpin(df: DataFrame) -> bool:
     tag, cannot drop a sibling frame pinned under the same tag by a
     concurrent call whose result is still lazy. Returns True if the frame
     was registered."""
-    for idx, (t, fr) in enumerate(_PINNED):
-        if fr is df:
-            try:
-                fr.unpersist()
-            except Exception:
-                pass
-            del _PINNED[idx]
-            return True
-    return False
+    with _LOCK:
+        idx = next((i for i, (_t, fr) in enumerate(_PINNED) if fr is df), None)
+        if idx is None:
+            return False
+        del _PINNED[idx]
+    _unpersist([df])
+    return True
 
 
 def pinned_tags() -> list[str]:
     """Tags of currently pinned frames (observability/testing)."""
-    return [t for t, _ in _PINNED]
+    with _LOCK:
+        return [t for t, _ in _PINNED]
 
 
 def local_checkpoint_fully_cached(df: DataFrame) -> bool:

@@ -498,7 +498,6 @@ def vocab_overlap(
         .distinct()
     )
     from flatbread_spark.operators.dedup import _pin
-    from flatbread_spark.session import no_adaptive_execution
 
     toks = _pin(toks)
     # group-size collect: the group table is tiny by definition (the old
@@ -507,10 +506,9 @@ def vocab_overlap(
     # per-lineage broadcast-build jobs on a cold run) and the sizes
     # re-enter the plan as a BIGINT literal map — exact, nothing
     # data-sized on the driver
-    with no_adaptive_execution(df.sparkSession):
-        size_rows = toks.groupBy("grp").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_vocab")
-        ).collect()
+    size_rows = toks.groupBy("grp").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_vocab")
+    ).collect()
     size_map = F.create_map(
         *[
             x

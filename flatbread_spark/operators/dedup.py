@@ -507,6 +507,29 @@ def _verify_jaccard(
     )
 
 
+def _over_cap_buckets(bands: DataFrame, cap: int) -> "tuple[DataFrame, int]":
+    """The band buckets of ``bands`` holding more than ``cap`` rows, as
+    (__band, __key, __min) — the bucket's least ``__id`` — re-entering the
+    plan as a local relation, plus their count.
+
+    The list is bounded by construction (≤ |band rows|/cap rows, ≤10⁶ at
+    10¹⁰ band rows with the default cap — the same bound that lets it
+    broadcast, i.e. the driver already held it). The stats aggregate is
+    pinned and collected once: the collect doubles as its
+    materialization, warm runs hit the CacheManager plan match, and in the
+    common no-skew case the empty list lets callers drop the anti-join,
+    the star branch and their broadcast-build jobs from the plan outright
+    — value-identical (an anti join against an empty set is the
+    identity, an inner join against it is empty)."""
+    over_agg = _pin(
+        bands.groupBy("__band", "__key")
+        .agg(F.count(F.lit(1)).alias("__m"), F.min("__id").alias("__min"))
+        .filter(F.col("__m") > cap)
+        .drop("__m")
+    )
+    return local_relation(over_agg)
+
+
 def minhash_probe(
     batch: DataFrame,
     corpus: DataFrame,
@@ -569,25 +592,9 @@ def minhash_probe(
     bands_b = bands_all.filter(F.col("__is_b")).drop("__is_b")
     bands_c = bands_all.filter(~F.col("__is_b")).drop("__is_b")
     if max_band_bucket is not None:
-        # the over-cap bucket list is BOUNDED by construction
-        # (≤ |band rows|/cap rows — the same bound that lets it broadcast,
-        # i.e. the driver already held it); pin + collect it once: the
-        # collect doubles as the stats materialization (warm runs hit the
-        # CacheManager plan match), and in the common NO-SKEW case the
-        # empty list removes the anti-join, the star branch and their
-        # broadcast-build jobs from the plan outright — value-identical
-        # (an anti join against an empty set is the identity, an inner
-        # join against it is empty)
-        from flatbread_spark.session import no_adaptive_execution
-
-        over_agg = _pin(
-            bands_c.groupBy("__band", "__key")
-            .agg(F.count(F.lit(1)).alias("__m"), F.min("__id").alias("__min"))
-            .filter(F.col("__m") > max_band_bucket)
-            .drop("__m")
-        )
-        with no_adaptive_execution(bands_c.sparkSession):
-            over, n_over = local_relation(over_agg)
+        # over-cap CORPUS buckets only: a batch doc in one links to the
+        # bucket's least corpus id (batch → corpus star edge)
+        over, n_over = _over_cap_buckets(bands_c, max_band_bucket)
         if n_over:
             small_c = bands_c.join(
                 F.broadcast(over), ["__band", "__key"], "left_anti",
@@ -656,27 +663,11 @@ def minhash_lsh_pairs(
     )
 
     if max_band_bucket is not None:
-        # one bucket-stats pass over the slim (id, band, key) rows, reduced
-        # immediately to the OVER-CAP bucket list — ≤ |band rows|/cap rows
-        # by construction (≤10⁶ at 10¹⁰ band rows with the default cap), so
-        # it broadcasts; the self-join branches then pay only a broadcast
-        # anti-join each instead of re-running the stats shuffle per branch
-        # pinned + collected once (bounded by construction — the same
-        # ≤ |band rows|/cap bound that let it broadcast): the collect
-        # doubles as the stats materialization, warm runs hit the
-        # CacheManager plan match, and the common NO-SKEW case drops the
-        # anti-join, star branch and their broadcast-build jobs from the
-        # plan — value-identical (anti join vs empty set ≡ identity)
-        from flatbread_spark.session import no_adaptive_execution
-
-        over_agg = _pin(
-            bands_df.groupBy("__band", "__key")
-            .agg(F.count(F.lit(1)).alias("__m"), F.min("__id").alias("__min"))
-            .filter(F.col("__m") > max_band_bucket)
-            .drop("__m")
-        )
-        with no_adaptive_execution(bands_df.sparkSession):
-            over, n_over = local_relation(over_agg)
+        # one bucket-stats pass over the slim (id, band, key) rows; the
+        # self-join branches then pay only a broadcast anti-join each
+        # instead of re-running the stats shuffle per branch. Star edges
+        # run from the bucket min to each other member (min → member)
+        over, n_over = _over_cap_buckets(bands_df, max_band_bucket)
         if n_over:
             small = bands_df.join(
                 F.broadcast(over), ["__band", "__key"], "left_anti",

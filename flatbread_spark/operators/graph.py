@@ -17,19 +17,8 @@ case and convergence is detected with a per-round changed-label count
 """
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# The edge-cap probe below pins a SESSION-GLOBAL conf for the duration of
-# one bounded collect. The get/set/collect/restore window is not atomic, so
-# without a guard a concurrent query on the same SparkSession could run
-# under the override or restore a stale value (ADVICE r8 #4). The lock makes
-# concurrent connected_components calls safe; it does NOT protect unrelated
-# queries issued from OTHER threads during the window — single-driver-thread
-# usage (the driver, bench.py, pytest) is the supported mode, noted here.
-_LIMIT_PROBE_LOCK = threading.Lock()
 
 
 def connected_components(
@@ -71,24 +60,12 @@ def connected_components(
         # One bounded action decides the path AND fetches the edges: collect
         # at most cap+1 rows (cap × 16 bytes driver memory); an extra row
         # means the graph is over the cap and the distributed path runs.
-        # initialNumPartitions pinned high for the probe: by default
-        # CollectLimit executes INCREMENTALLY — a 1-partition attempt scaled
-        # up by spark.sql.limit.scaleUpFactor, up to ~log₄(partitions)
-        # separate jobs re-running the reduce stage. Benign idle, but the
-        # per-job scheduling overhead amplified ~7× under a loaded host
-        # (BENCH_r07 driver 10.1 s vs tracked local 1.7 s on dedup_clusters);
-        # a count-then-collect variant fixed that but paid a second full
-        # reduce pass (~1.7× local). Single job over all partitions is the
-        # right shape at every load point.
-        conf = edges.sparkSession.conf
-        _K = "spark.sql.limit.initialNumPartitions"
-        with _LIMIT_PROBE_LOCK:  # see lock comment at module top
-            old = conf.get(_K, None)
-            conf.set(_K, "10000000")
-            try:
-                probe = und.limit(driver_max_edges + 1).collect()
-            finally:
-                conf.set(_K, old) if old is not None else conf.unset(_K)
+        # The probe runs under the session's own limit confs: overriding
+        # CollectLimit's initial partition count so it scans every
+        # partition in one job ran the same jobs in the same time on
+        # dedup_clusters and semantic_dedup (18 and 7 jobs, sf0.01), and
+        # it wrote a session-global conf under a process lock.
+        probe = und.limit(driver_max_edges + 1).collect()
         if len(probe) <= driver_max_edges:
             parent: dict = {}
 
@@ -284,8 +261,7 @@ def pagerank_fixed(
     deliberately: rank⋈edge joins on power-law graphs have hub-key skew,
     and AQE's runtime skew-join split is exactly the mitigation a
     1000-executor run needs — pagerank is the documented case where the
-    stage-jobs buy real re-planning (vs the fixed-shape two-phase
-    machinery, which runs under ``no_adaptive_execution``).
+    stage-jobs buy real re-planning.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")

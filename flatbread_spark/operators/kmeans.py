@@ -90,28 +90,23 @@ def kmeans_lloyd(
         .cast("bigint")
         .cast("decimal(38,0)")
     )
-    from flatbread_spark.session import no_adaptive_execution
-
     for _ in range(iters):
         assigned = _assign(df, vec_col, centroids)
-        # fixed-shape join-free internal action: one Arrow projection +
-        # one partial-aggregated shuffle per iteration — AQE's per-stage
-        # job splitting doubles the iteration's job count for nothing
-        # (SCALE.md round-11, the multi-job contention amplifier)
-        with no_adaptive_execution(df.sparkSession):
-            rows = (
-                # a ragged (wrong-length, non-null) vector gets
-                # cluster=NULL from the Arrow kernel; drop it here so the
-                # update null-propagates like _assign instead of raising
-                # in the driver loop (ADVICE r4)
-                assigned.filter(F.col("cluster").isNotNull())
-                .select(
-                    "cluster", F.posexplode(F.col(vec_col)).alias("__d", "__x")
-                )
-                .groupBy("cluster", "__d")
-                .agg(F.count(F.lit(1)).alias("n"), F.sum(scaled).alias("s"))
-                .collect()
-            )
+        # one Arrow projection + one partial-aggregated shuffle per
+        # iteration; under AQE that is a map-stage job plus a result job
+        # (turning AQE off for it measured no faster, SCALE.md round-11
+        # rule 2)
+        rows = (
+            # a ragged (wrong-length, non-null) vector gets cluster=NULL
+            # from the Arrow kernel; drop it here so the update
+            # null-propagates like _assign instead of raising in the
+            # driver loop (ADVICE r4)
+            assigned.filter(F.col("cluster").isNotNull())
+            .select("cluster", F.posexplode(F.col(vec_col)).alias("__d", "__x"))
+            .groupBy("cluster", "__d")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum(scaled).alias("s"))
+            .collect()
+        )
         new = [list(c) for c in centroids]  # empty clusters keep position
         for r in rows:
             new[r["cluster"]][r["__d"]] = float(r["s"]) / float(r["n"]) / _SCALE

@@ -129,21 +129,18 @@ def _covariance_with_pin(
     after materializing instead of leaking it until a manual release
     (ADVICE r10 #2)."""
     from flatbread_spark.cache import pin
-    from flatbread_spark.session import no_adaptive_execution
 
     # dim²-bounded (dim² + dim + 1 rows): pinned so a second call in the
     # same session skips the corpus moment pass, collected ONCE (the
     # collect doubles as the pin materialization — no per-lineage
-    # broadcast jobs, no AQE stage-splitting of a fixed-shape join-free
-    # internal aggregate)
+    # broadcast jobs)
     agg = pin(
         moment_partials(df, vec_col, dim)
         .groupBy("i", "j")
         .agg(F.sum("psum").alias("s")),
         tag="pca",
     )
-    with no_adaptive_execution(df.sparkSession):
-        rows = agg.collect()
+    rows = agg.collect()
     n_dec = next(r["s"] for r in rows if r["i"] == -1 and r["j"] == -1)
     mean_dec = {r["i"]: r["s"] for r in rows if r["i"] >= 0 and r["j"] == -1}
     prods = [(r["i"], r["j"], r["s"]) for r in rows if r["j"] >= 0]

@@ -83,23 +83,21 @@ def characteristic_terms(
     from pyspark.sql import Window
 
     from flatbread_spark.cache import pin
-    from flatbread_spark.session import no_adaptive_execution
 
     counts = pin(_token_counts(df, group_col, text_col, lowercase),
                  tag="vocabulary")
     # group totals are #groups rows (the old code already BROADCAST them =
     # held them on the driver); collecting once folds the count-table pin
     # materialization into this one internal action — a cold run stops
-    # paying per-lineage broadcast-build jobs + AQE stage-jobs through the
-    # uncached aggregate (the round-11 pin-materialization class). The
+    # paying per-lineage broadcast-build jobs through the uncached
+    # aggregate (the round-11 pin-materialization class). The
     # grand total is the exact Python-int sum of the same BIGINTs,
     # INCLUDING a NULL group's mass (matching the old grp_tot aggregate);
     # the old inner join dropped NULL-group rows from the scored table, so
     # the map lookup's NULL result is filtered below — value-identical.
-    with no_adaptive_execution(df.sparkSession):
-        grp_rows = counts.groupBy("grp").agg(
-            F.sum("n").cast("bigint").alias("n_grp")
-        ).collect()
+    grp_rows = counts.groupBy("grp").agg(
+        F.sum("n").cast("bigint").alias("n_grp")
+    ).collect()
     n_grand = sum(int(r["n_grp"]) for r in grp_rows)
     nonnull = [r for r in grp_rows if r["grp"] is not None]
     grp_map = F.create_map(

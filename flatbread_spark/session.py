@@ -7,45 +7,8 @@ Arrow batches every pandas-UDF boundary.
 from __future__ import annotations
 
 import os
-import threading
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
-
-# held for the whole override window: concurrent internal actions must not
-# interleave their set/restore of the session-global conf (same discipline
-# as streaming.replay.bounded_state_partitions — the r9 probe-conf race)
-_NO_AQE_LOCK = threading.RLock()
-
-
-@contextmanager
-def no_adaptive_execution(spark: SparkSession):
-    """Run a library-INTERNAL action without AQE's stage-by-stage job
-    splitting (VERDICT r10 #2, the multi-job contention amplifier).
-
-    AQE executes every query as a chain of separate JOBS (one per
-    materialized query stage), each paying fixed scheduler + task-launch
-    overhead — the right trade for user plans whose joins it re-plans at
-    runtime, pure cost for the engine's own two-phase machinery actions
-    (range-rank stats collects, checkpoint materializations): their plans
-    are shapes the library fixed at write time — no joins to re-plan, and
-    AQE never coalesces a user-specified ``repartitionByRange`` exchange
-    anyway (only ENSURE_REQUIREMENTS/rebalance origins). Measured on
-    quantile_buckets at sf0.01: 12 jobs → 4 with this guard plus the
-    lazy-checkpoint fold (ranking.two_phase_offset).
-
-    Restore-on-error, never leaks: the caller's OWN queries (which may
-    join, and deserve AQE) execute outside the window. Reentrant lock so
-    nested two-phase calls (weighted_percentiles → cumsum → rank) don't
-    deadlock."""
-    key = "spark.sql.adaptive.enabled"
-    with _NO_AQE_LOCK:
-        before = spark.conf.get(key)
-        spark.conf.set(key, "false")
-        try:
-            yield
-        finally:
-            spark.conf.set(key, before)
 
 _INFER_GENERATE_RULE = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"

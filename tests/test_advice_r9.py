@@ -156,9 +156,8 @@ def test_empty_emb_pairs_literal_branch():
 
 def test_graph_probe_conf_concurrent_calls(spark):
     """Two threads race connected_components (both on the driver-side
-    union-find path, whose probe pins spark.sql.limit.initialNumPartitions
-    session-globally). After both finish the conf key must be back to its
-    pre-call state and both results must be correct."""
+    union-find path, whose bounded edge probe is a collect). Both results
+    must be correct, and the session's limit conf is left as it was."""
     from flatbread_spark.operators.graph import connected_components
 
     key = "spark.sql.limit.initialNumPartitions"

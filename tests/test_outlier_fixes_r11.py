@@ -4,9 +4,6 @@ The four ≥4× driver/local bench outliers were all multi-job queries; the
 fixes cut Spark job counts (the contention-amplified fixed cost) without
 touching values. These tests pin the machinery the fixes introduced:
 
-- ``session.no_adaptive_execution``: restores the conf on success AND on
-  error, is reentrant (nested two-phase calls), and never leaks a
-  disabled AQE into the caller's session;
 - ``scalable_pos(with_total=True)``: the piggybacked total equals the
   exact row count and the positions are byte-identical to the
   ``with_total=False`` path (same plan, same checkpoint discipline);
@@ -14,34 +11,7 @@ touching values. These tests pin the machinery the fixes introduced:
   ``sameSemantics`` produces exactly the rows of the general two-sided
   path run over value-identical inputs with DIFFERENT lineage.
 """
-import pytest
 from pyspark.sql import functions as F
-
-
-def test_no_adaptive_execution_restores_and_nests(spark):
-    from flatbread_spark.session import no_adaptive_execution
-
-    key = "spark.sql.adaptive.enabled"
-    before = spark.conf.get(key)
-    with no_adaptive_execution(spark):
-        assert spark.conf.get(key) == "false"
-        with no_adaptive_execution(spark):  # reentrant: nested two-phase
-            assert spark.conf.get(key) == "false"
-        # inner exit restores to the value the inner context saw ("false"),
-        # not the session default — the outer context owns the restore
-        assert spark.conf.get(key) == "false"
-    assert spark.conf.get(key) == before
-
-
-def test_no_adaptive_execution_restores_on_error(spark):
-    from flatbread_spark.session import no_adaptive_execution
-
-    key = "spark.sql.adaptive.enabled"
-    before = spark.conf.get(key)
-    with pytest.raises(RuntimeError, match="boom"):
-        with no_adaptive_execution(spark):
-            raise RuntimeError("boom")
-    assert spark.conf.get(key) == before
 
 
 def test_scalable_pos_with_total_matches_count_and_positions(spark):
