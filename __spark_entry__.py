@@ -80,15 +80,12 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # pyspark 4.x). Normalize to the engine's BIGINT epoch-ns contract at
     # this single load boundary so every event-time operator downstream is
     # dtype-agnostic. UTC session tz pins NTZ wall-clock == naive-SQL epoch.
-    # Set confs here so every query is self-sufficient on any session.
+    # The values depend on these two confs, so they are set here and every
+    # query is self-sufficient on any session. Perf-only confs (the
+    # InferFiltersFromGenerate exclusion) are left to get_spark, so a
+    # caller's own setting survives an entry-query call.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # See flatbread_spark.session.get_spark: the inferred below-Generate
-    # filter re-computes expensive chunk/shingle array expressions per row.
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    )
     df = load_table(spark, sf_dir, name)
     if name == "events":
         from flatbread_spark.functions.eventtime import ensure_epoch_ns

@@ -53,7 +53,22 @@ def get_spark(
     Generate above a join can genuinely benefit from the inferred filter
     pruning rows before the exchange — pass ``True`` there, or flip the
     live session with ``spark.conf.set("spark.sql.optimizer.excludedRules",
-    "")`` (the conf is runtime-mutable)."""
+    "")`` (the conf is runtime-mutable).
+
+    pyspark's DataFrame debugging is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+    every ``pyspark.sql.functions``/``Column`` call captures its Python call
+    site and sends it to the JVM, about five extra py4j round trips per
+    call; the operators build each frame from hundreds of such calls, so
+    the capture was most of a presentation chain's driver time (a warm
+    pivot -> totals -> percentages build: 1,413 -> 532 py4j commands,
+    pinned by ``tests/test_driver_round_trips.py``). The cost:
+    a Spark runtime error no longer carries the ``== DataFrame ==`` section
+    naming the Python line that built the failing expression. pyspark reads
+    the flag once per process, at the first ``Column`` call made while a
+    session is active (``pyspark.errors.utils._enable_debugging_cache``),
+    so a caller who wants the call sites builds their own session with the
+    conf ``true`` before making any column expression."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
@@ -108,6 +123,18 @@ def get_spark(
         # (tests/test_session_reuse.py). Cost: stack traces name
         # ``GeneratedIterator`` without the id.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # pyspark's DataFrame debugging (default on) wraps every
+        # pyspark.sql.functions and Column call: it walks the Python stack
+        # for the call site and makes ~5 extra py4j round trips
+        # (getActiveSession, a conf get, PySparkCurrentOrigin.set/.clear and
+        # a reflection lookup). Measured with this entry as the only change
+        # on the perfbench tabulate queries (local[4], 4-core VM): non-GC
+        # py4j commands per warm pass 4,462 -> 1,836 (scripts/driver_trips.py
+        # on the sf0.01 testdata); in perfbench, Python driver CPU per pass
+        # 0.46 -> 0.26 s and traced entry.build_s 2.22 -> 1.81 s with jobs
+        # (16) and tasks (16) unchanged; pass CPU 8.61 -> 7.83 s (median of
+        # 12 seeds, 12 of 12 pairs better). See the docstring for the cost.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # events.parquet stores TIMESTAMP(NANOS) which Spark rejects by default;
         # read as BIGINT nanoseconds and convert explicitly where needed

@@ -13,6 +13,10 @@ retains for stopped queries) keyed by sink name, latest drain wins.
 :func:`input_row_counter` counts the rows a drained query ingested from
 every progress update, which ``q.recentProgress`` (a ring buffer capped
 by ``spark.sql.streaming.numRecentProgressUpdates``) cannot.
+
+A drain that does not finish within its timeout stops the query and
+raises :class:`DrainTimeout`, so no caller reads a partial memory sink as
+the answer and no source directory is removed under a running query.
 """
 from __future__ import annotations
 
@@ -64,9 +68,21 @@ def bounded_state_partitions(spark, cap: int = 8):
             spark.conf.set(key, before)
 
 
+class DrainTimeout(TimeoutError):
+    """A bounded replay drain did not terminate within its timeout; the
+    query has been stopped and its sink holds a partial answer."""
+
+
 def drain(q, timeout: int = 300):
-    """awaitTermination + register the query handle for plan capture."""
-    q.awaitTermination(timeout)
+    """awaitTermination + register the query handle for plan capture.
+    Raises :class:`DrainTimeout` (after stopping ``q``) if the query is
+    still running after ``timeout`` seconds."""
+    if not q.awaitTermination(timeout):
+        q.stop()
+        raise DrainTimeout(
+            f"streaming query {q.name!r} did not drain within {timeout} s; "
+            "it was stopped and its sink is incomplete"
+        )
     _LAST_QUERY[q.name] = q
     return q
 

@@ -11,7 +11,7 @@ Pinned here:
 
 - value invariance: the Generate-heaviest declared queries produce
   identical rows with the rule ON and OFF (the conf is runtime-mutable,
-  so one session serves both arms);
+  so one session serves both arms, and no entry query may write it);
 - the ``get_spark(infer_generate_filters=True)`` escape hatch wires the
   flag to an empty exclusion list.
 """
@@ -52,6 +52,9 @@ def test_values_identical_with_rule_on(spark, name):
         release_caches()  # drop pins so the ON arm re-plans from scratch
         spark.conf.set(key, "")
         on = _rows(fn(spark, SF_DIR))
+        # the ON arm must really run with the rule on: an entry query that
+        # wrote the exclusion back would make both arms identical
+        assert spark.conf.get(key, "") == "", f"{name} re-excluded the rule"
     finally:
         spark.conf.set(key, before)
         release_caches()

@@ -480,3 +480,24 @@ def test_stream_drift_drain_check_counts_every_batch(spark):
         spark.conf.set(key, before)
     assert not _LAST_QUERY["fb_stream_drift"].recentProgress
     assert rows and sum(r["n_window"] for r in rows) > 0
+
+
+def test_drain_timeout_stops_the_query_and_raises(spark):
+    """A drain that outlives its timeout stops the query and raises by
+    name, instead of returning while the query still writes its sink: an
+    unbounded ``rate`` source never terminates on its own."""
+    from flatbread_spark.streaming.replay import _LAST_QUERY, DrainTimeout, drain
+
+    q = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("memory").queryName("fb_drain_timeout").start()
+    )
+    try:
+        with pytest.raises(DrainTimeout, match="fb_drain_timeout.*1 s"):
+            drain(q, timeout=1)
+        assert not q.isActive
+        assert not spark.streams.active
+        assert "fb_drain_timeout" not in _LAST_QUERY
+    finally:
+        if q.isActive:
+            q.stop()
